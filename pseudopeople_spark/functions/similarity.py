@@ -319,9 +319,8 @@ def make_pair_sim(families: "dict[str, frozenset]"):
     """Plain-Python nickname-family-aware first-name similarity —
     max(jaro_winkler, 0.93 if the two names' family sets overlap,
     best Levenshtein similarity across the family cross-product capped
-    at 0.93). Shared by the pandas-UDF path (make_first_name_sim_udf)
-    and the mapInArrow scorer (linkage.scoring.score_pairs_arrow) so
-    the two plans are value-identical by construction.
+    at 0.93). The first-name kernel of the pair scorer
+    (linkage.scoring._make_sim_engine).
 
     The family cross-product best-Levenshtein is memoized on the
     VARIANT-SET pair, not the name pair: a name with a family maps to
@@ -367,45 +366,6 @@ def make_pair_sim(families: "dict[str, frozenset]"):
         return s
 
     return pair_sim
-
-
-def make_first_name_sim_udf(families: "dict[str, frozenset]"):
-    """Arrow pandas-UDF wrapper over make_pair_sim with a
-    PROCESS-persistent memo (module-level _FIRST_SIM_CACHES) keyed on
-    the (Zipfian) name pair: each distinct pair's ~|family|^2
-    Levenshteins run once per python worker, not once per row or per
-    Arrow batch. Fast paths (value-identical): equal names
-    short-circuit to 1.0, and the family logic is skipped when the
-    plain JW already exceeds the 0.93 family cap."""
-    fam_token = family_cache_token(families)
-    pair_sim = make_pair_sim(families)
-
-    @F.pandas_udf(T.DoubleType())
-    def first_sim(a: pd.Series, b: pd.Series) -> pd.Series:
-        from pseudopeople_spark.functions import similarity as S  # worker-side module ref
-
-        cache = S._FIRST_SIM_CACHES.setdefault(fam_token, {})
-        if len(cache) > S._CACHE_MAX:
-            cache.clear()
-        av = a.to_numpy(dtype=object)
-        bv = b.to_numpy(dtype=object)
-        out = []
-        for x, y in zip(av, bv):
-            if x is None or y is None:
-                out.append(None)
-                continue
-            if x == y:
-                out.append(1.0 if x else 0.0)
-                continue
-            k = (x, y)
-            v = cache.get(k)
-            if v is None:
-                v = pair_sim(str(x), str(y))
-                cache[k] = v
-            out.append(v)
-        return pd.Series(out, dtype="float64")
-
-    return first_sim
 
 
 # --------------------------------------------------------------------------

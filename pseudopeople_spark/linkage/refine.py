@@ -4,15 +4,16 @@ violate the dataset-period uniqueness invariant.
 An entity appears at most once per dataset-period (one census row per
 simulant per year — reference ``interface.py`` generates one row per
 simulant per dataset pull; the guardian-duplication twin is the single
-exception and shares its original's ``base_rid``).  ``tiered_match``
-already uses that invariant as a hard veto on DIRECT edges
-(``same_dataset_distinct``), but transitive closure can still merge two
-entities through a chain of cross-dataset edges: the measured FP mass
-at 300k simulants is dominated by same-household twins (same last name,
-same dob, similar first names — JOSH/JOHN, JULIE/JULIA) whose merged
-cluster then contains BOTH entities' census rows.  That violation is
-machine-detectable, so instead of accepting the k*m amplified
-false-positive pairs we split exactly those clusters.
+exception and shares its original's ``base_rid``).  The match cascade
+(``scoring.cascade_match_mask``) already uses that invariant as a hard
+veto on DIRECT edges (``same_dataset_distinct``), but transitive
+closure can still merge two entities through a chain of cross-dataset
+edges: the measured FP mass at 300k simulants is dominated by
+same-household twins (same last name, same dob, similar first names —
+JOSH/JOHN, JULIE/JULIA) whose merged cluster then contains BOTH
+entities' census rows.  That violation is machine-detectable, so
+instead of accepting the k*m amplified false-positive pairs we split
+exactly those clusters.
 
 Split = greedy constrained re-agglomeration per violating cluster:
 take the cluster's match edges best-score-first and union-find them

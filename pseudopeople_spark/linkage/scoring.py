@@ -1,38 +1,42 @@
-"""Pairwise scoring — batched field similarities over candidate pairs.
+"""Pairwise scoring and match decision over candidate pairs.
 
-One join brings both records' normalized fields onto the pair row
-(two hash joins on record_id, the same key the dedup shuffle already
-partitioned by), then a single projection computes the per-field
-similarity vector:
+One worker-side Arrow batch function, :func:`match_batches`, scores and
+decides every candidate pair:
 
-  * name fields: Jaro-Winkler (Arrow pandas UDF, DuckDB-compatible
-    semantics) — the only Python in the stage, batched per Arrow chunk;
-  * DOB: built-in levenshtein on the normalized yyyyMMdd string,
-    converted to a [0,1] similarity;
-  * SSN: exact/edit-distance on digits (built-in);
-  * zipcode/city/state/sex: exact-match indicators (built-in).
+  * the similarity vector (:func:`_make_sim_engine`): Jaro-Winkler on
+    names (nickname-family aware on the first name), month/day-swap
+    aware normalized edit distance on the yyyyMMdd dob, normalized edit
+    distance on SSN digits, exact-match indicators on the rest;
+  * a weighted linear score with null-aware renormalization (missing
+    fields redistribute their weight);
+  * the tiered match cascade (:func:`cascade_match_mask`).
 
-The combiner is a weighted linear score with null-aware renormalization
-(missing fields redistribute their weight), thresholded into match
-edges. Everything except the JW UDF is whole-stage-codegen'd.
+Only the matched rows cross back to the JVM, in the slim projection the
+pipeline checkpoints (``MATCH_COLUMNS``). :func:`match_pairs` picks from
+the records count alone how the l_*/r_* fields reach that function:
+
+  * ``n_records <= SMALL_LOOKUP_MAX_ROWS``: the records table ships as
+    Arrow IPC bytes inside the task closure (:class:`ArrowIpcLookup`);
+  * ``n_records <= LOOKUP_MAX_ROWS``: the records table is written once
+    as scratch parquet and read once per python worker;
+  * above that: pairs join the records co-partitioned on id
+    (:func:`attach_pair_fields`) and the joined rows stream through the
+    same batch function — records are never replicated.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from pseudopeople_spark.functions.similarity import jaro_winkler_udf
 
 
 @dataclass(frozen=True)
 class FieldSpec:
     name: str
-    kind: str  # 'jw' | 'lev' | 'exact'
+    kind: str  # 'jw' | 'dob' | 'lev' | 'exact'
     weight: float
-
 
 DEFAULT_FIELDS: "tuple[FieldSpec, ...]" = (
     FieldSpec("first_name", "jw", 1.2),
@@ -45,82 +49,28 @@ DEFAULT_FIELDS: "tuple[FieldSpec, ...]" = (
     FieldSpec("sex", "exact", 0.3),
 )
 
+# attach values the cascade reads beyond the sim inputs
+CASCADE_AUX_FIELDS = ("ssn_digits", "first_name", "byear", "dataset", "period", "base_rid")
+
+# every record field the batch function reads (sim inputs + cascade aux)
+LOOKUP_FIELDS = tuple(dict.fromkeys([s.name for s in DEFAULT_FIELDS] + list(CASCADE_AUX_FIELDS)))
+
+# the matched-row projection every regime emits
+MATCH_COLUMNS = ("id_l", "id_r", "score", "is_match", "l_ssn_digits", "r_ssn_digits")
+
 
 def attach_pair_fields(
     pairs: DataFrame,
     records: DataFrame,
     fields: "list[str]",
     id_col: str = "record_id",
-    broadcast_records: bool = False,
 ) -> DataFrame:
     """(id_l, id_r) × records -> one row per pair with l_*/r_* fields.
-
-    ``broadcast_records`` hash-broadcasts the two record projections
-    instead of sort-merge joining. Measured A/B on 26.5M pairs × 745k
-    records at 8 pinned cores (tools/ab_scoring_broadcast.py): broadcast
-    186s vs sort-merge 116s — broadcast LOSES here because the id_l
-    join already rides the pair-dedup's HashPartitioning(id_l) exchange
-    (see resolve()._pairs), so broadcasting saves only the id_r
-    exchange while paying two ~200MB single-threaded hash-relation
-    builds per query plus GC pressure. Kept as an option for genuinely
-    small record tables joined against un-pre-partitioned pair sets."""
+    Two sort-merge joins; the id_l join rides the pair dedup's
+    HashPartitioning(id_l) exchange (see resolve()._pairs)."""
     l = records.select(F.col(id_col).alias("id_l"), *[F.col(c).alias(f"l_{c}") for c in fields])
     r = records.select(F.col(id_col).alias("id_r"), *[F.col(c).alias(f"r_{c}") for c in fields])
-    if broadcast_records:
-        l, r = F.broadcast(l), F.broadcast(r)
     return pairs.join(l, "id_l").join(r, "id_r")
-
-
-def _py_gated(udf, a: Column, b: Column) -> Column:
-    """Arrow-UDF similarity with the decided rows SHORT-CIRCUITED on
-    the JVM side. Spark evaluates pandas UDFs in a separate
-    ArrowEvalPython pass for EVERY row regardless of any enclosing CASE
-    branch, so `when(equal, 1.0).otherwise(udf(a, b))` still ships all
-    the string bytes to Python. Instead the UDF inputs themselves are
-    nulled for rows the JVM already decides (either side null, or
-    upper-equal — the dominant case in blocked candidate pairs, since
-    blocking keys select for name agreement): the Arrow batch then
-    carries a validity bitmap instead of string payloads for those rows
-    and the Python loop hits its first `is None` branch. Measured on
-    the 300k-simulant bench this removes the string traffic for the
-    ~60% equal-name pairs. Value semantics are identical: the UDFs'
-    own equal-string fast path returns 1.0 (or 0.0 for '') which is
-    reproduced here as a JVM expression.
-
-    ``PP_SCORING_JVM_GATE=0`` disables the gate (plain null-guarded UDF
-    over the upper-cased columns) — the switch exists so the two plan
-    shapes can be A/B-measured on identical inputs
-    (tools/ab_scoring_gate.py)."""
-    import os
-
-    if os.environ.get("PP_SCORING_JVM_GATE", "1") == "0":
-        return F.when(
-            a.isNull() | b.isNull(), F.lit(None).cast("double")
-        ).otherwise(udf(F.upper(a), F.upper(b)))
-    ua, ub = F.upper(a), F.upper(b)
-    need = a.isNotNull() & b.isNotNull() & (ua != ub)
-    s_py = udf(F.when(need, ua), F.when(need, ub))
-    return (
-        F.when(a.isNull() | b.isNull(), F.lit(None).cast("double"))
-        .when(ua == ub, F.when(F.length(ua) > 0, F.lit(1.0)).otherwise(F.lit(0.0)))
-        .otherwise(s_py)
-    )
-
-
-def _sim(spec: FieldSpec) -> Column:
-    a, b = F.col(f"l_{spec.name}"), F.col(f"r_{spec.name}")
-    if spec.kind == "jw":
-        return _py_gated(jaro_winkler_udf, a, b)
-    elif spec.kind == "dob":
-        return dob_similarity(a, b)
-    elif spec.kind == "lev":
-        max_len = F.greatest(F.length(a), F.length(b))
-        # explicit both-empty -> null (ANSI-safe: x/0 raises under
-        # spark.sql.ansi.enabled, the Spark 4 default)
-        s = F.when(max_len > 0, F.lit(1.0) - F.levenshtein(a, b).cast("double") / max_len)
-    else:
-        s = F.when(a == b, 1.0).otherwise(0.0)
-    return F.when(a.isNull() | b.isNull(), None).otherwise(s)
 
 
 _FAMILIES: "dict[str, frozenset] | None" = None
@@ -144,107 +94,12 @@ def _nickname_families() -> "dict[str, frozenset]":
     return _FAMILIES
 
 
-def score_pairs(pairs_with_fields: DataFrame, fields: "tuple[FieldSpec, ...]" = DEFAULT_FIELDS) -> DataFrame:
-    """Add sim_<field> columns and a null-renormalized weighted score.
-
-    Dispatches between two value-identical physical strategies
-    (``PP_SCORING_IMPL``: ``arrow`` | ``udf``):
-
-    * ``arrow`` (default): ONE ``mapInArrow`` pass computes every
-      similarity and the score per Arrow batch — no ``EvalPythonExec``
-      row queue. The scalar-pandas-UDF plan buffers EVERY input row
-      through a JVM-side HybridRowQueue (UnsafeRow.copy per row, see
-      EvalPythonExec.doExecute) to rejoin UDF outputs positionally; on
-      a ~20-column pair frame that queue traffic plus the giant
-      codegen'd sims+score projection dominates the stage and is pure
-      per-row JVM overhead that grows with row width. mapInArrow
-      streams whole columnar batches both ways instead — the JVM side
-      is reduced to the parquet scan and Arrow conversion.
-    * ``udf``: the previous shape — JVM codegen for the cheap sims +
-      two scalar pandas UDFs for the name fields. Kept for A/B
-      (tools/ab_scoring_gate.py) and as the fallback.
-
-    Both paths share the same python kernels (similarity.jaro_winkler,
-    make_pair_sim, process-persistent memos), so outputs are
-    bit-identical (asserted by tests/test_scoring_impls.py)."""
-    import os
-
-    if os.environ.get("PP_SCORING_IMPL", "arrow") == "arrow":
-        return score_pairs_arrow(pairs_with_fields, fields)
-    return score_pairs_udf(pairs_with_fields, fields)
-
-
-def score_pairs_udf(pairs_with_fields: DataFrame, fields: "tuple[FieldSpec, ...]" = DEFAULT_FIELDS) -> DataFrame:
-    """Scalar-pandas-UDF scoring plan (see score_pairs docstring).
-    The first-name similarity is nickname-family aware (the inverse of
-    the use_nickname noise channel) via a memoized Arrow UDF
-    (similarity.make_first_name_sim_udf)."""
-    from pseudopeople_spark.functions.similarity import make_first_name_sim_udf
-
-    df = pairs_with_fields
-    first_sim_udf = make_first_name_sim_udf(_nickname_families())
-    num: Column = F.lit(0.0)
-    den: Column = F.lit(0.0)
-    for spec in fields:
-        sim_col = f"sim_{spec.name}"
-        if spec.name == "first_name":
-            # same JVM short-circuit as the plain JW fields: the family
-            # UDF's equal-string fast path is 1.0 / 0.0-for-empty too
-            sim = _py_gated(first_sim_udf, F.col("l_first_name"), F.col("r_first_name"))
-        else:
-            sim = _sim(spec)
-        df = df.withColumn(sim_col, sim)
-        present = F.col(sim_col).isNotNull()
-        num = num + F.when(present, F.col(sim_col) * spec.weight).otherwise(0.0)
-        den = den + F.when(present, F.lit(spec.weight)).otherwise(0.0)
-    return df.withColumn("score", F.when(den > 0, num / den).otherwise(F.lit(0.0)))
-
-
-def score_pairs_arrow(
-    pairs_with_fields: DataFrame, fields: "tuple[FieldSpec, ...]" = DEFAULT_FIELDS
-) -> DataFrame:
-    """Single-pass mapInArrow scorer (see score_pairs docstring for the
-    rationale vs the UDF plan). Per batch: pyarrow.compute handles the
-    null-propagating equality sims C-side; python touches ONLY the rows
-    a JVM/C kernel can't decide (non-equal name pairs -> memoized
-    jaro-winkler / nickname-family sim; non-equal dob/ssn -> bounded
-    levenshtein), gathered with pc.take so the equal majority is never
-    materialized as python objects. Output batches append the sim/score
-    columns to the input columns unchanged."""
-    from pyspark.sql import types as T
-
-    in_schema = pairs_with_fields.schema
-    out_schema = T.StructType(
-        list(in_schema.fields)
-        + [T.StructField(f"sim_{s.name}", T.DoubleType()) for s in fields]
-        + [T.StructField("score", T.DoubleType())]
-    )
-    in_names = [f.name for f in in_schema.fields]
-    specs = [(s.name, s.kind, s.weight) for s in fields]
-    families = _nickname_families()
-
-    def _score_batches(batches):
-        compute = _make_sim_engine(families, specs)
-        for rb in batches:
-            col = {name: rb.column(i) for i, name in enumerate(in_names)}
-            add_arrays, add_names = compute(col, rb.num_rows)
-            yield _pa_batch(list(rb.columns) + add_arrays, list(in_names) + add_names)
-
-    return pairs_with_fields.mapInArrow(_score_batches, out_schema)
-
-
-def _pa_batch(arrays, names):
-    import pyarrow as pa
-
-    return pa.RecordBatch.from_arrays(arrays, names=names)
-
-
 def _make_sim_engine(families, specs):
-    """Worker-side factory shared by score_pairs_arrow and
-    score_pairs_fused: returns ``compute(col, n) -> (arrays, names)``
-    where ``col`` maps l_*/r_* field names to pyarrow Arrays and the
-    result appends sim_<field> columns plus the null-renormalized
-    weighted score."""
+    """Worker-side factory shared by match_batches and the streaming
+    linker: returns ``compute(col, n) -> (sims, score)`` where ``col``
+    maps l_*/r_* field names to pyarrow Arrays, ``sims`` maps each
+    spec's field name to a float64 ndarray (NaN is SQL NULL) and
+    ``score`` is the null-renormalized weighted score."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -254,6 +109,9 @@ def _make_sim_engine(families, specs):
     pair_sim = S.make_pair_sim(families)
     fam_token = S.family_cache_token(families)
 
+    def lev_ratio(x, y):
+        m = max(len(x), len(y))
+        return 1.0 - S.levenshtein(x, y) / m if m else None
 
     def _batch_lev_ratio(out, a, b, idx):
         """Vectorized Wagner-Fischer over the subset rows at idx:
@@ -328,7 +186,7 @@ def _make_sim_engine(families, specs):
         out[idx] = ratio
         return slow
 
-    def _py_rows(out, valid, ua, ub, idx, cache, fn):
+    def _py_rows(out, ua, ub, idx, cache, fn):
         """Fill out[idx] with fn over the (string) pairs at idx,
         via the process-persistent cache."""
         if idx.size == 0:
@@ -358,7 +216,7 @@ def _make_sim_engine(families, specs):
         out = np.zeros(len(valid), dtype="float64")
         out[eq & nonempty] = 1.0
         idx = np.nonzero(valid & ~eq)[0]
-        _py_rows(out, valid, ua, ub, idx, cache, fn)
+        _py_rows(out, ua, ub, idx, cache, fn)
         return out, valid
 
     def _lev_sim(a, b, cache):
@@ -375,11 +233,7 @@ def _make_sim_engine(families, specs):
         idx = np.nonzero(valid & ~eq)[0]
         slow = _batch_lev_ratio(out, a, b, idx)
 
-        def lev_ratio(x, y):
-            m = max(len(x), len(y))
-            return 1.0 - S.levenshtein(x, y) / m if m else None
-
-        _py_rows(out, valid, a, b, slow, cache, lev_ratio)
+        _py_rows(out, a, b, slow, cache, lev_ratio)
         return out, valid
 
     def _dob_sim(a, b, cache):
@@ -399,16 +253,11 @@ def _make_sim_engine(families, specs):
         idx = np.nonzero(valid & ~eq)[0]
         slow = _batch_lev_ratio(out, a, b, idx)
 
-        def lev_ratio(x, y):
-            m = max(len(x), len(y))
-            return 1.0 - S.levenshtein(x, y) / m if m else None
-
-        _py_rows(out, valid, a, b, slow, cache, lev_ratio)
+        _py_rows(out, a, b, slow, cache, lev_ratio)
         return out, valid
 
     def compute(col, n):
-        """col: l_*/r_* name -> pa.Array; returns (arrays, names) for
-        the sim_<field> columns + score."""
+        """col: l_*/r_* name -> pa.Array; returns (sims, score)."""
         if len(S._JW_CACHE) > S._CACHE_MAX:
             S._JW_CACHE.clear()
         if len(S._LEV_CACHE) > S._CACHE_MAX:
@@ -416,9 +265,9 @@ def _make_sim_engine(families, specs):
         fs_cache = S._FIRST_SIM_CACHES.setdefault(fam_token, {})
         if len(fs_cache) > S._CACHE_MAX:
             fs_cache.clear()
-        sims = []
-        arrays = []
-        names = []
+        sims = {}
+        num = np.zeros(n, dtype="float64")
+        den = np.zeros(n, dtype="float64")
         for name, kind, weight in specs:
             a, b = col[f"l_{name}"], col[f"r_{name}"]
             if kind == "jw" and name == "first_name":
@@ -436,34 +285,24 @@ def _make_sim_engine(families, specs):
                     zero_copy_only=False
                 )
             # a python kernel returning None marks the row null
-            nan = np.isnan(out)
-            if nan.any():
-                valid = valid & ~nan
-            sims.append((out, valid, weight))
-            arrays.append(pa.array(out, type=pa.float64(), mask=~valid))
-            names.append(f"sim_{name}")
-        num = np.zeros(n, dtype="float64")
-        den = np.zeros(n, dtype="float64")
-        for out, valid, weight in sims:
+            valid = valid & ~np.isnan(out)
+            sims[name] = np.where(valid, out, np.nan)
             num += np.where(valid, out * weight, 0.0)
             den += np.where(valid, weight, 0.0)
         score = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
-        arrays.append(pa.array(score, type=pa.float64()))
-        names.append("score")
-        return arrays, names
+        return sims, score
 
     return compute
 
 
-# single live records lookup directory per process (see
-# score_pairs_fused docstring: the previous resolve() call's scratch
-# parquet is deleted when the next one is written, so a long-lived
-# session holds at most one)
+# single live records lookup directory per process: match_pairs
+# deletes the previous call's scratch parquet before it sets up the
+# next lookup, so a long-lived session holds at most one
 _LIVE_REC_DIR: "str | None" = None
 
-# driver-side sub-step wall clocks for the fused scorer (lookup-table
-# scratch write) — merged into resolve()'s stage_seconds so scaling
-# benches can see which scoring sub-step is fixed vs variable
+# driver-side sub-step wall clocks for the lookup set-up — merged into
+# resolve()'s stage_seconds so scaling benches can see which scoring
+# sub-step is fixed vs variable
 PROF: "dict[str, float]" = {}
 
 
@@ -472,14 +311,19 @@ PROF: "dict[str, float]" = {}
 # write + per-worker read: at bench scale (20k simulants = ~45k
 # records) the write job alone costs 0.6-1.9 s of the resolve wall,
 # while ~4 MB of closure bytes ride the task-binary broadcast for
-# free. Above the gate the parquet path is unchanged (the 745k-2.5M
-# record scaling runs, and the only 100 TB-viable shape).
+# free.
 SMALL_LOOKUP_MAX_ROWS = 150_000
+
+# Records tables at or under this row count (~500 MB of lookup fields)
+# are replicated to every python worker as scratch parquet. Larger
+# tables (the 10^12-document regime) join the pairs co-partitioned by
+# id instead, which never replicates records.
+LOOKUP_MAX_ROWS = 5_000_000
 
 
 class ArrowIpcLookup:
     """Closure-shipped records lookup: Arrow IPC bytes, deserialized at
-    most once per python worker (make_fused_batches caches decoded
+    most once per python worker (_lookup_table caches the decoded
     structures keyed by ``token``)."""
 
     def __init__(self, table):
@@ -500,61 +344,37 @@ class ArrowIpcLookup:
         return pa.ipc.open_stream(self._ipc).read_all()
 
 
-def score_pairs_fused(
-    spark,
+def match_pairs(
     pairs: DataFrame,
     records: DataFrame,
-    attach: "list[str]",
-    fields: "tuple[FieldSpec, ...]" = DEFAULT_FIELDS,
-    id_col: str = "record_id",
-    emit_attach: "list[str] | None" = None,
-    decide: "dict | None" = None,
-    n_records: "int | None" = None,
+    n_records: int,
+    threshold: float = 0.92,
+    same_dataset_distinct: bool = False,
 ) -> DataFrame:
-    """Fused attach+score: one mapInArrow pass over the BARE pair ids,
-    with the record fields looked up worker-side from a scratch-parquet
-    copy of the records table. Replaces attach_pair_fields' two sort-merge
-    joins AND shrinks the scoring stage's exchange traffic from the
-    ~250-byte wide pair row to the 16-byte id pair — on a host whose
-    per-core throughput degrades under memory traffic, bytes-per-pair
-    is the scaling limiter, so this is the variant resolve() uses
-    whenever the records table fits a per-worker lookup
-    (ResolveConfig.broadcast_score_limit, default 5M records ~ 500MB).
-    Beyond the limit the join + score_pairs_arrow path is the scale
-    shape: it co-partitions pairs and records by id instead of
-    replicating records, which is the only option at 10^12 documents.
+    """Score and decide every (id_l, id_r) pair; returns the matched
+    rows only, as ``MATCH_COLUMNS``. ``records`` must carry
+    ``LOOKUP_FIELDS``; ``n_records`` (its row count) selects the regime
+    (module docstring).
 
-    Output schema and values are identical to
-    attach_pair_fields(...) |> score_pairs_arrow(...) (asserted by
-    tests/test_scoring_impls.py).
+    The lookup regimes score over the BARE pair ids: no attach joins,
+    and the scoring stage's exchange traffic is the 16-byte id pair
+    instead of the ~250-byte wide row — on a host whose per-core
+    throughput degrades under memory traffic, bytes-per-pair is the
+    scaling limiter. The scratch-parquet regime writes the records
+    projection ONCE, executor-parallel, and each python worker reads it
+    directly (one column-pruned read per worker, page-cache-shared on a
+    single host) — collecting the table to the driver instead was a
+    serial 10-20 s job at 745k records. Scratch dir:
+    ``$PP_FUSED_LOOKUP_DIR`` if set, else the system tmpdir; on a real
+    cluster point it at the job's DFS scratch. The returned DataFrame is
+    lazy, so its scratch table can only be deleted by the NEXT call:
+    consume (or checkpoint) the result before calling again.
 
-    Lookup distribution: the records projection is written ONCE as an
-    executor-parallel parquet to scratch storage and each python worker
-    reads it directly (column-pruned to what the sims/emit need, one
-    read per worker, page-cache-shared on a single host). The previous
-    shape collected the table to the DRIVER (toArrow) and pickle-
-    broadcast it — a serial driver job on the scoring stage's critical
-    path (measured 10-20 s at 745k records) that cost the same wall at
-    EVERY parallelism (a pure fixed, non-scaling term) and held the
-    whole table on the driver heap. Scratch dir: $PP_FUSED_LOOKUP_DIR
-    if set, else the system tmpdir; on a real cluster point it at the
-    job's DFS scratch — broadcast-via-storage is the standard shape for
-    lookup tables near the broadcast ceiling. A single module-level
-    slot deletes the PREVIOUS resolve() call's scratch table when the
-    next one is written, so at most one is live per process (the
-    returned DataFrame is lazy, so the current one cannot be deleted
-    eagerly here).
-
-    ``emit_attach`` (default: all of ``attach``) restricts which
-    attach-VALUE columns the worker sends back to the JVM. All of
-    ``attach`` is still looked up worker-side (the sims need it), but
-    columns no downstream consumer reads — last_name/dob/city/... once
-    their sims are computed — are pure Python→JVM Arrow-stream bytes.
-    Catalyst cannot prune a mapInArrow's output into the Python
-    process, so the trim must happen here. At 42M pairs the full
-    l_*/r_* string set is ~2x the emitted bytes of the consumed set,
-    and that stream crosses a local socket per batch — non-scaling
-    wall on the scoring stage's critical path."""
+    Deciding worker-side means only matched rows (~records-sized, not
+    pairs-sized) cross the Python->JVM Arrow stream: at 42M candidate
+    pairs the full scored stream (all pairs x l_*/r_* strings + sims,
+    ~200 B/pair ~ 8.5 GB per resolve) shrinks ~60x, and no JVM-side
+    cascade scan over the full pair set remains."""
     import os
     import shutil
     import tempfile
@@ -563,71 +383,45 @@ def score_pairs_fused(
 
     from pyspark.sql import types as T
 
-    if n_records is not None and n_records <= SMALL_LOOKUP_MAX_ROWS:
-        # small-records path: no scratch write, no per-worker file read
-        _t0 = _time.time()
-        path = ArrowIpcLookup(records.select(id_col, *attach).toArrow())
-        PROF["scoring.lookup_ipc"] = round(_time.time() - _t0, 2)
-    else:
-        base = os.environ.get("PP_FUSED_LOOKUP_DIR") or tempfile.gettempdir()
-        path = os.path.join(base, f"pp_fused_rec_{uuid.uuid4().hex}")
-        _t0 = _time.time()
-        records.select(id_col, *attach).write.mode("overwrite").parquet(path)
-        PROF["scoring.lookup_write"] = round(_time.time() - _t0, 2)
-        global _LIVE_REC_DIR
-        if _LIVE_REC_DIR is not None:
-            shutil.rmtree(_LIVE_REC_DIR, ignore_errors=True)
-        _LIVE_REC_DIR = path
-    if emit_attach is None:
-        emit_attach = attach
-    else:
-        missing = [c for c in emit_attach if c not in attach]
-        if missing:
-            raise ValueError(f"emit_attach columns not in attach: {missing}")
-    rec_schema = {f.name: f.dataType for f in records.select(id_col, *attach).schema.fields}
-    pair_fields = list(pairs.select("id_l", "id_r").schema.fields)
-    if decide is not None:
-        # decide-and-filter mode: the cascade runs worker-side and only
-        # matched rows cross back, already in the slim projection the
-        # pipeline checkpoints (cascade_match_mask docstring)
-        aux_missing = [c for c in CASCADE_AUX_FIELDS if c not in attach]
-        if aux_missing:
-            raise ValueError(f"decide mode needs cascade aux fields in attach: {aux_missing}")
-        emit_attach = []
-        out_schema = T.StructType(
-            pair_fields
-            + [
-                T.StructField("score", T.DoubleType()),
-                T.StructField("is_match", T.BooleanType()),
-                T.StructField("l_ssn_digits", rec_schema["ssn_digits"]),
-                T.StructField("r_ssn_digits", rec_schema["ssn_digits"]),
-            ]
-        )
-    else:
-        out_schema = T.StructType(
-            pair_fields
-            + [T.StructField(f"{side}_{c}", rec_schema[c]) for side in ("l", "r") for c in emit_attach]
-            + [T.StructField(f"sim_{s.name}", T.DoubleType()) for s in fields]
-            + [T.StructField("score", T.DoubleType())]
-        )
-    specs = [(s.name, s.kind, s.weight) for s in fields]
-    families = _nickname_families()
-    # the batches mapInArrow sees come from the 2-column projection
-    # below, NOT pairs' full schema — derive the column positions from
-    # that projection so extra/reordered pair columns can't misindex
+    global _LIVE_REC_DIR
+    if _LIVE_REC_DIR is not None:
+        shutil.rmtree(_LIVE_REC_DIR, ignore_errors=True)
+        _LIVE_REC_DIR = None
+    fields = records.select("record_id", *LOOKUP_FIELDS)
+    ssn_type = fields.schema["ssn_digits"].dataType
     cand = pairs.select("id_l", "id_r")
-    i_l, i_r = 0, 1
-
-    return cand.mapInArrow(
-        make_fused_batches(path, id_col, attach, specs, families, i_l, i_r, emit_attach,
-                           decide=decide),
-        out_schema,
+    schema = T.StructType(
+        list(cand.schema.fields)
+        + [
+            T.StructField("score", T.DoubleType()),
+            T.StructField("is_match", T.BooleanType()),
+            T.StructField("l_ssn_digits", ssn_type),
+            T.StructField("r_ssn_digits", ssn_type),
+        ]
     )
+    _t0 = _time.time()
+    if n_records <= SMALL_LOOKUP_MAX_ROWS:
+        src = ArrowIpcLookup(fields.toArrow())
+        PROF["scoring.lookup_ipc"] = round(_time.time() - _t0, 2)
+    elif n_records <= LOOKUP_MAX_ROWS:
+        base = os.environ.get("PP_FUSED_LOOKUP_DIR") or tempfile.gettempdir()
+        src = _LIVE_REC_DIR = os.path.join(base, f"pp_fused_rec_{uuid.uuid4().hex}")
+        fields.write.mode("overwrite").parquet(src)
+        PROF["scoring.lookup_write"] = round(_time.time() - _t0, 2)
+    else:
+        src = None
+        cand = attach_pair_fields(cand, fields, list(LOOKUP_FIELDS))
+    families = _nickname_families()
+
+    def _batches(batches):
+        return match_batches(batches, src, families, threshold, same_dataset_distinct)
+
+    return cand.mapInArrow(_batches, schema)
 
 
-# Per-phase wall-clock accumulators for the fused scorer, updated by
-# every worker batch (two perf_counter calls per phase per 20k-row
-# batch — noise). Read by tools/profile_scoring.py --inproc, where the
+# Per-phase wall-clock accumulators for match_batches, updated by
+# every batch (two perf_counter calls per phase per 20k-row batch —
+# noise). Read by tools/profile_scoring.py --inproc, where the
 # generator runs driver-side; in real Spark runs each python worker
 # accumulates its own copy (not collected).
 PHASE_SECONDS: "dict[str, float]" = {"lookup": 0.0, "take": 0.0, "sims": 0.0, "emit": 0.0}
@@ -643,381 +437,132 @@ PHASE_SECONDS: "dict[str, float]" = {"lookup": 0.0, "take": 0.0, "sims": 0.0, "e
 _FUSED_REC_CACHE: "dict[str, object]" = {"key": None}
 
 
-def make_fused_batches(src, id_col, attach, specs, families, i_l, i_r, emit_attach=None,
-                       decide=None):
-    """Worker-side generator factory for score_pairs_fused — module
-    level so tools/mp_scaling_probe.py can drive it in-process over
-    pyarrow batches without a SparkSession. ``src`` is either a path to
-    the scratch parquet written by score_pairs_fused (read worker-side,
-    column-pruned) or any object with a ``.value`` Arrow table (the
-    in-process probe's shim). ``emit_attach`` (default: all of
-    ``attach``) selects which looked-up value columns are sent back to
-    the JVM; the rest exist only as sim inputs.
+def _lookup_table(src):
+    """(pd.Index over the record_id column, field -> Array) for a lookup
+    source: a scratch-parquet path (read column-pruned) or an object
+    with ``.value`` (an Arrow table) and ``.token``."""
+    import pandas as pd
 
-    ``decide`` (dict with ``threshold`` / ``same_dataset_distinct``)
-    switches the generator to decide-and-filter mode: the match cascade
-    (:func:`cascade_match_mask`) runs in the worker and each batch
-    emits ONLY the matched rows with the slim downstream projection
-    (id_l, id_r, score, is_match, l/r ssn_digits) — see
-    cascade_match_mask's docstring for why this is the scaling shape."""
-    if emit_attach is None:
-        emit_attach = attach
-    # look up only what the sims read or the JVM receives — an attach
-    # column that is neither (e.g. one kept for the fallback join
-    # path's symmetry) costs a pc.take per side per batch otherwise
-    need = {s[0] for s in specs} | set(emit_attach)
-    if decide is not None:
-        need |= set(CASCADE_AUX_FIELDS) & set(attach)
-    lookup = [c for c in attach if c in need]
+    cache = _FUSED_REC_CACHE
+    key = src if isinstance(src, str) else src.token
+    if cache["key"] != key:
+        if isinstance(src, str):
+            import pyarrow.dataset as ds
 
-    def _fused_batches(batches):
-        from time import perf_counter
+            tbl = ds.dataset(src).to_table(columns=["record_id", *LOOKUP_FIELDS])
+        else:
+            tbl = src.value
+        cache["key"] = key
+        cache["index"] = pd.Index(tbl.column("record_id").to_numpy(zero_copy_only=False))
+        cache["cols"] = {c: tbl.column(c).combine_chunks() for c in LOOKUP_FIELDS}
+    return cache["index"], cache["cols"]
 
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.compute as pc
 
-        from pseudopeople_spark.linkage import scoring as _S
+def match_batches(batches, src, families, threshold=0.92, same_dataset_distinct=False):
+    """The worker-side batch function of every regime: Arrow batches of
+    candidate pairs in, Arrow batches of matched ``MATCH_COLUMNS`` rows
+    out. With a lookup ``src`` (see :func:`_lookup_table`) the input
+    batches carry only id_l/id_r and the fields are taken from the
+    lookup; with ``src=None`` they already carry the l_*/r_* fields
+    (the join regime). Module level so tools can drive it in-process
+    over pyarrow batches without a SparkSession."""
+    from time import perf_counter
 
-        ph = _S.PHASE_SECONDS
-        cache = _S._FUSED_REC_CACHE
-        key = src if isinstance(src, str) else getattr(src, "token", None) or id(src.value)
-        if cache.get("key") != key:
-            if isinstance(src, str):
-                import pyarrow.dataset as ds
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-                tbl = ds.dataset(src).to_table(columns=[id_col] + lookup)
-            else:
-                tbl = src.value
-            cache["key"] = key
-            cache["index"] = pd.Index(tbl.column(id_col).to_numpy(zero_copy_only=False))
-            cache["cols"] = {c: tbl.column(c).combine_chunks() for c in lookup}
-        index = cache["index"]
-        rec_cols = cache["cols"]
-        compute = _make_sim_engine(families, specs)
-        for rb in batches:
-            t0 = perf_counter()
-            ids_l, ids_r = rb.column(i_l), rb.column(i_r)
+    specs = [(s.name, s.kind, s.weight) for s in DEFAULT_FIELDS]
+    compute = _make_sim_engine(families, specs)
+    if src is not None:
+        index, rec_cols = _lookup_table(src)
+    for rb in batches:
+        t0 = perf_counter()
+        ids_l, ids_r = rb.column("id_l"), rb.column("id_r")
+        if src is None:
+            col = {name: rb.column(name) for name in rb.schema.names}
+            t1 = t2 = perf_counter()
+        else:
             take_l = index.get_indexer(ids_l.to_numpy(zero_copy_only=False))
             take_r = index.get_indexer(ids_r.to_numpy(zero_copy_only=False))
             if (take_l < 0).any() or (take_r < 0).any():
-                raise ValueError("pair id not present in broadcast records table")
-            tl, tr = pa.array(take_l), pa.array(take_r)
+                raise ValueError("pair id not present in records lookup table")
             t1 = perf_counter()
-            col = {}
-            arrays = [ids_l, ids_r]
-            names = ["id_l", "id_r"]
-            for side, tk in (("l", tl), ("r", tr)):
-                for c in lookup:
-                    col[f"{side}_{c}"] = pc.take(rec_cols[c], tk)
-                for c in emit_attach:
-                    arrays.append(col[f"{side}_{c}"])
-                    names.append(f"{side}_{c}")
+            col = {
+                f"{side}_{c}": pc.take(rec_cols[c], tk)
+                for side, tk in (("l", pa.array(take_l)), ("r", pa.array(take_r)))
+                for c in LOOKUP_FIELDS
+            }
             t2 = perf_counter()
-            add_arrays, add_names = compute(col, rb.num_rows)
-            t3 = perf_counter()
-            if decide is not None:
-                import numpy as np
-
-                simmap = {
-                    nm[4:]: a.to_numpy(zero_copy_only=False)
-                    for nm, a in zip(add_names, add_arrays)
-                    if nm.startswith("sim_")
-                }
-                score = add_arrays[add_names.index("score")].to_numpy(zero_copy_only=False)
-                mask = cascade_match_mask(
-                    simmap, score, col,
-                    threshold=decide.get("threshold", 0.92),
-                    same_dataset_distinct=decide.get("same_dataset_distinct", False),
-                )
-                sel = pa.array(np.flatnonzero(mask))
-                out = _pa_batch(
-                    [
-                        pc.take(ids_l, sel),
-                        pc.take(ids_r, sel),
-                        pa.array(score[mask], type=pa.float64()),
-                        pa.array(np.ones(len(sel), dtype=bool)),
-                        pc.take(col["l_ssn_digits"], sel),
-                        pc.take(col["r_ssn_digits"], sel),
-                    ],
-                    ["id_l", "id_r", "score", "is_match", "l_ssn_digits", "r_ssn_digits"],
-                )
-            else:
-                out = _pa_batch(arrays + add_arrays, names + add_names)
-            t4 = perf_counter()
-            ph["lookup"] += t1 - t0
-            ph["take"] += t2 - t1
-            ph["sims"] += t3 - t2
-            ph["emit"] += t4 - t3
-            yield out
-
-    return _fused_batches
+        sims, score = compute(col, rb.num_rows)
+        t3 = perf_counter()
+        mask = cascade_match_mask(sims, score, col, threshold, same_dataset_distinct)
+        sel = pa.array(np.flatnonzero(mask))
+        out = pa.RecordBatch.from_arrays(
+            [
+                pc.take(ids_l, sel),
+                pc.take(ids_r, sel),
+                pa.array(score[mask], type=pa.float64()),
+                pa.array(np.ones(len(sel), dtype=bool)),
+                pc.take(col["l_ssn_digits"], sel),
+                pc.take(col["r_ssn_digits"], sel),
+            ],
+            names=list(MATCH_COLUMNS),
+        )
+        t4 = perf_counter()
+        PHASE_SECONDS["lookup"] += t1 - t0
+        PHASE_SECONDS["take"] += t2 - t1
+        PHASE_SECONDS["sims"] += t3 - t2
+        PHASE_SECONDS["emit"] += t4 - t3
+        yield out
 
 
-def swap_month_day(dob: Column) -> Column:
-    """yyyyMMdd with month/day transposed — inverts the reference's
-    swap_month_and_day noise for comparison purposes."""
-    return F.concat(dob.substr(1, 4), dob.substr(7, 2), dob.substr(5, 2))
+def cascade_match_mask(sim, score, aux, threshold=0.92, same_dataset_distinct=False):
+    """The match decision over one batch's similarity vectors — a
+    deterministic rule cascade, each tier motivated by one of the
+    reference's noise channels, with the weighted score as the
+    probabilistic fallback:
 
-
-def dob_similarity(a: Column, b: Column) -> Column:
-    """[0,1] similarity of two yyyyMMdd strings that treats a month/day
-    transposition as an exact match (it is the single most common date
-    corruption — reference swap_months_and_days) and otherwise falls
-    back to normalized edit distance."""
-    mx = F.greatest(F.length(a), F.length(b))
-    # the equal branch already covers both-empty; the guard keeps the
-    # division ANSI-safe (x/0 raises under Spark 4's default ANSI mode)
-    lev = F.when(mx > 0, F.lit(1.0) - F.levenshtein(a, b).cast("double") / mx)
-    return F.when(a.isNull() | b.isNull(), None).otherwise(
-        F.when((a == b) | (swap_month_day(a) == b), 1.0).otherwise(lev)
-    )
-
-
-def _tier_columns(threshold: float = 0.92) -> "dict[str, Column]":
-    """Decision layer on top of the similarity vector — a deterministic
-    rule cascade, each tier motivated by one of the reference's noise
-    channels, with the weighted score as the probabilistic fallback:
-
-      tier 1  SSN exact + (first-name agrees OR dob agrees).
-              The corroboration guard matters: copy_from_household_member
-              puts a SPOUSE's ssn on 1% of tax rows, so a bare SSN join
-              would merge households.
+      tier 1  SSN exact + (first-name agrees OR dob agrees). The
+              corroboration guard matters: copy_from_household_member
+              puts a RELATIVE's ssn on 1% of tax rows, so a bare SSN
+              join would merge households. When first name or dob is
+              blanked, last name + non-conflicting dob corroborates.
+      tier 1b SSN within 2 edits (both full 9-digit) + the same
+              corroboration.
       tier 2  dob agrees (incl. month/day-swap) + last name strong +
               (first name strong OR missing). Covers the no-SSN
               census pairs.
       tier 3  weighted score >= threshold with >=3 identity fields
-              (first/last/dob/ssn) present on both sides — the
-              evidence floor kills sparse pairs whose few overlapping
-              fields renormalize to a perfect score.
-      veto    decisive first-name disagreement (both present, JW<0.6)
-              blocks tiers 2-3: copy-noise gives spouses/siblings an
+              present on both sides — the evidence floor kills sparse
+              pairs whose few overlapping fields renormalize to a
+              perfect score.
+      tier 4  dob missing on one side: near-exact names + independent
+              corroboration (middle, geography or birth year).
+      tier 5  dob conflict (a relative's copied dob): near-exact names
+              + a near-agreeing dob or an exactly matching middle.
+      tier 6  last name blanked: first name + dob exact.
+      veto    decisive first-name disagreement (both present, JW<0.65)
+              blocks tiers 2-6: copy-noise gives spouses/siblings an
               identical dob at the same address, and first name is then
-              the only discriminating field.
+              the only discriminating field. An SSN conflict (>4 edits)
+              blocks tiers 2-6 too.
 
-    All columns here are JVM expressions over the already-computed sims.
-    """
-    jf, jl = F.col("sim_first_name"), F.col("sim_last_name")
-    dob = F.col("sim_dob")
-    mid = F.col("sim_middle")
-    sex = F.col("sim_sex")
-    ssn_exact = (F.col("l_ssn_digits") == F.col("r_ssn_digits")) & (F.length("l_ssn_digits") == 9)
-    first_missing = F.col("l_first_name").isNull() | F.col("r_first_name").isNull()
-    mid_compat = mid.isNull() | (mid == 1.0)   # middle initial doesn't contradict
-    sex_compat = sex.isNull() | (sex == 1.0)   # sex doesn't contradict
-    geo_exact = (F.col("sim_zipcode") == 1.0) & (F.col("sim_city") == 1.0)
-    evidence = (
-        (jf.isNotNull()).cast("int")
-        + (jl.isNotNull()).cast("int")
-        + (dob.isNotNull()).cast("int")
-        + (mid.isNotNull()).cast("int")
-        + (F.col("sim_zipcode").isNotNull()).cast("int")
-        + (F.col("l_ssn_digits").isNotNull() & F.col("r_ssn_digits").isNotNull()).cast("int")
-    )
-    # 0.65: low enough that a single in-name typo on a short name
-    # (PAVI/PAUL ~ 0.67) doesn't hard-refute a pair that other fields
-    # support; different-person first names in the same block sit ~0.5
-    veto = jf.isNotNull() & (jf < 0.65)
-    # SSN disagreement is strong negative evidence — but the threshold
-    # must sit ABOVE the noise channel's tail: write_wrong_digits at
-    # token_probability 0.1 corrupts >=3 of 9 digits on ~6% of noised
-    # cells (true pairs!), while different people's SSNs differ by ~7+
-    # digits. lev > 4 keeps ~99.9% of noised true pairs and still
-    # refutes every random pair. Conflict blocks tiers 2-6 (tier 1
-    # requires exactness anyway).
-    ssn_conflict = (
-        F.col("l_ssn_digits").isNotNull()
-        & F.col("r_ssn_digits").isNotNull()
-        & (F.levenshtein("l_ssn_digits", "r_ssn_digits") > 4)
-    )
-    # tier 1: SSN agreement, corroborated. The corroboration matters:
-    # copy_from_household_member puts a RELATIVE's ssn on 1% of tax rows,
-    # so a bare SSN join would merge households. When first name or dob
-    # is blanked, last-name + non-conflicting dob corroborates instead.
-    # geo conflict: both zips present and different — used as negative
-    # evidence in the name-only tiers (same-household true pairs share
-    # the address; noise breaks it for only ~2% of them)
-    geo_conflict = (
-        F.col("sim_zipcode").isNotNull() & (F.col("sim_zipcode") == 0.0)
-    )
-    # birth-year evidence (from the dob, or reconstructed ref_year-age):
-    # agreement within the misreport_age spread supports a match; a gap
-    # beyond any noise channel refutes one
-    def _sane_byear(c: str):
-        y = F.col(c).cast("int")
-        # digit noise produces absurd years (7013, 1763) — treat as
-        # missing rather than as refuting evidence
-        return F.when((y >= 1850) & (y <= 2100), y)
+    With ``same_dataset_distinct`` a pair within one dataset-period is
+    vetoed unless it is a guardian-duplication twin (same base_rid).
 
-    byear_diff = F.abs(_sane_byear("l_byear") - _sane_byear("r_byear"))
-    byear_agree = F.coalesce(byear_diff <= 2, F.lit(False))
-    byear_conflict = F.coalesce(byear_diff > 5, F.lit(False))
-    tier1 = ssn_exact & (
-        (jf >= 0.85)
-        | ((dob >= 0.85) & ~veto)
-        | ((jl >= 0.85) & (jf.isNull() | dob.isNull()) & (dob.isNull() | (dob >= 0.55)) & ~veto)
-    )
-    # near-exact SSN (<=2 noised digits — write_wrong_digits at its
-    # default rate leaves ~94% of noised SSNs within 2) with the same
-    # corroboration: random SSN pairs differ by ~7+ digits, so lev<=2
-    # is still ~1-in-10^5 evidence
-    ssn_near = (
-        F.col("l_ssn_digits").isNotNull()
-        & (F.length("l_ssn_digits") == 9)
-        # BOTH sides must be full SSNs: unlike equality, lev<=2 does not
-        # imply equal lengths — a 7-digit truncated/masked SSN matches
-        # ~100 different full SSNs and is not 1-in-10^5 evidence
-        & (F.length("r_ssn_digits") == 9)
-        & (F.levenshtein("l_ssn_digits", "r_ssn_digits") <= 2)
-    )
-    tier1b = ssn_near & (
-        (jf >= 0.85) | ((dob >= 0.85) & ~veto) | ((jl >= 0.85) & ~veto & (dob >= 0.55))
-    )
-    # tier 2: dob agreement (incl. month/day swap) + strong last name +
-    # first agrees or is missing (blank/fake-name noise); a missing
-    # first must not be contradicted by middle initial or sex
-    tier2 = (dob == 1.0) & (jl >= 0.85) & ~ssn_conflict & (
-        ((jf >= 0.85) & (mid_compat | (jf == 1.0)))
-        | (first_missing & mid_compat & sex_compat)
-    )
-    # tier 3: probabilistic fallback with an evidence floor (sparse
-    # pairs renormalize to perfect scores) and the first-name veto
-    tier3 = (
-        (F.col("score") >= threshold)
-        & (evidence >= 3)
-        & ~veto
-        & ~ssn_conflict
-        # with the first name missing, near-miss dobs are pure
-        # name-collision bait — demand exact dob agreement and a
-        # non-contradicting sex (different-sex twins share last name +
-        # dob and one blanked first name is all it takes otherwise)
-        & (jf.isNull() | (jf >= 0.78))
-        & (jf.isNotNull() | ((dob == 1.0) & sex_compat))
-        # a high score with NO hard identifier present (no dob on a
-        # side, no ssn pair) is just agreeing names — not enough
-        & (dob.isNotNull() | (F.col("l_ssn_digits").isNotNull() & F.col("r_ssn_digits").isNotNull()))
-    )
-    # tier 4: dob missing on one side (leave_blank) — near-exact names
-    # + independent corroboration. 0.94 on the first name sits ABOVE
-    # the 0.93 nickname-family grants (a family overlap alone must not
-    # qualify as near-exact) while admitting one-typo names.
-    tier4 = (
-        dob.isNull() & (jf >= 0.94) & (jl >= 0.95)
-        & ((mid == 1.0) | geo_exact | byear_agree) & ~byear_conflict
-        & ~veto & sex_compat & ~ssn_conflict & ~geo_conflict
-    )
-    # tier 5: dob conflict (copy_from_household_member puts a relative's
-    # dob on the row). The danger class is same-name kin at the same
-    # address (parent/child, same-name siblings), so demand either a
-    # near-agreeing dob with compatible middle/sex, or an exactly
-    # matching middle initial with a half-agreeing dob.
-    tier5 = (
-        (jl >= 0.95) & ~veto & sex_compat & ~ssn_conflict & ~geo_conflict
-        & (
-            ((jf >= 0.9) & (dob >= 0.875) & mid_compat)
-            | ((jf >= 0.95) & (dob >= 0.55) & (mid == 1.0))
-            | ((jf >= 0.95) & (dob >= 0.55) & geo_exact & mid_compat)
-            # NOTE deliberately NO (names + dob~0.75 + byear) arm: at
-            # 20k simulants that signature is genuinely ambiguous —
-            # same-name same-birth-year DIFFERENT people with a
-            # 2-char dob difference are as common as true pairs whose
-            # dob took one corrupted segment (measured +209 FP / +150
-            # TP at 20k) — precision loses more than recall gains.
-        )
-    )
-    # tier 6: last name blanked on a side — first+dob exact with
-    # non-contradicting middle/sex (child records appear only in
-    # census+ssa, where dob is the main identifier)
-    tier6 = jl.isNull() & (jf >= 0.95) & (dob == 1.0) & mid_compat & sex_compat & ~ssn_conflict
-    return {
-        "tier1": tier1, "tier1b": tier1b, "tier2": tier2, "tier3": tier3,
-        "tier4": tier4, "tier5": tier5, "tier6": tier6,
-    }
-
-
-def tier_flags(scored: DataFrame, threshold: float = 0.92) -> DataFrame:
-    """scored + one boolean column per cascade tier — the diagnosis
-    surface (tools/diag_fp.py): which tier admitted a false positive."""
-    out = scored
-    for name, col in _tier_columns(threshold).items():
-        out = out.withColumn(name, F.coalesce(col, F.lit(False)))
-    return out
-
-
-def tiered_match(
-    scored: DataFrame, threshold: float = 0.92, same_dataset_distinct: bool = False
-) -> DataFrame:
-    """OR of the cascade tiers (see :func:`_tier_columns` for the rule
-    rationale), plus the same-dataset-period hard constraint."""
-    is_match = None
-    for col in _tier_columns(threshold).values():
-        c = F.coalesce(col, F.lit(False))
-        is_match = c if is_match is None else (is_match | c)
-    if same_dataset_distinct and "l_dataset" in scored.columns:
-        # Within ONE extract period an entity appears at most once (one
-        # census row per simulant per year, reference interface.py), so
-        # a same-dataset pair is a different entity BY CONSTRUCTION —
-        # except a guardian-duplication twin, whose record_id is the
-        # original's + "_dup". Cluster merges are the costly error class
-        # (one bad edge turns every cross-pair of two clusters into an
-        # FP), and same-household same-name kin are exactly the pairs
-        # this hard constraint removes.
-        if "l_base_rid" in scored.columns:
-            # int64-id pipeline: the guardian-duplication twin shares its
-            # original's base_rid (the id hashed with "_dup" stripped).
-            # base_rid is VERIFIED 1:1 against the stripped string key in
-            # _assign_int_ids' materialized-frame aggregate, so equality
-            # here is exactly the string test below — a hash collision
-            # cannot falsely exempt an unrelated same-dataset pair.
-            dup_twin = F.col("l_base_rid") == F.col("r_base_rid")
-        else:
-            dup_twin = (F.col("id_r") == F.concat(F.col("id_l"), F.lit("_dup"))) | (
-                F.col("id_l") == F.concat(F.col("id_r"), F.lit("_dup"))
-            )
-        same_dataset = F.col("l_dataset") == F.col("r_dataset")
-        if "l_period" in scored.columns:
-            # the uniqueness unit is the dataset-PERIOD (normalize_records
-            # stamps it from ref_year / period_col): a 2020-census row and
-            # a 2030-census row of the same entity are a legitimate match.
-            # NULL periods compare equal (eqNullSafe) — the conservative
-            # whole-dataset veto for callers that stamp no period.
-            same_dataset = same_dataset & F.col("l_period").eqNullSafe(F.col("r_period"))
-        is_match = is_match & (~same_dataset | dup_twin)
-    return scored.withColumn("is_match", is_match)
-
-
-# attach values the worker-side cascade reads beyond the sim inputs
-CASCADE_AUX_FIELDS = ("ssn_digits", "first_name", "byear", "dataset", "period", "base_rid")
-
-
-def cascade_match_mask(sim, score, aux, threshold=0.92, same_dataset_distinct=False):
-    """Vectorized (numpy/pyarrow) replica of :func:`_tier_columns` +
-    :func:`tiered_match`'s hard constraint, for evaluation INSIDE the
-    Arrow scoring worker.
-
-    Deciding worker-side lets the fused scorer emit only the matched
-    rows (~records-sized, not pairs-sized) with the slim downstream
-    projection: at 42M candidate pairs the previous Python->JVM stream
-    (all pairs x l_*/r_* strings + sims, ~200 B/pair ~ 8.5 GB per
-    resolve) shrinks ~60x, and the JVM-side cascade scan over the full
-    pair set disappears. Both ends of that stream are per-pair memory
-    traffic on the scoring stage's critical path — exactly the term the
-    N->4N scaling measurement shows saturating the shared memory bus.
-
-    SQL three-valued logic maps to two-valued numpy here because every
-    NULL-producing comparison in the cascade sits under an EVEN number
-    of negations: NaN comparisons yield False, which `coalesce(tier,
-    False)` makes equivalent — and each NEGATED subterm (veto,
-    ssn_conflict, byear_conflict, geo_conflict, same_dataset) is
-    null-proof by construction (isNotNull guards / non-null inputs /
-    pre-coalesced), mirroring the Column definitions. Parity with the
-    JVM cascade is asserted over an adversarial null grid by
-    tests/test_cascade_parity.py.
+    Nulls follow SQL semantics: every NULL-producing comparison sits
+    under an EVEN number of negations, so NaN comparisons yielding False
+    equal SQL's ``coalesce(tier, False)``, and each NEGATED subterm
+    (veto, ssn_conflict, byear_conflict, geo_conflict, same_dataset) is
+    null-proof by construction. tests/test_scoring.py checks the
+    decisions against a Spark Column implementation of the same rules
+    over an adversarial null grid.
 
     ``sim``: field -> float64 ndarray with NaN as SQL NULL (exactly the
     arrays `_make_sim_engine` emits). ``score``: float64 ndarray.
     ``aux``: l_*/r_* -> pyarrow Array for CASCADE_AUX_FIELDS.
-    Returns a bool ndarray (the rows `.where(is_match)` would keep)."""
+    Returns a bool ndarray: the matched rows."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -1042,14 +587,27 @@ def cascade_match_mask(sim, score, aux, threshold=0.92, same_dataset_distinct=Fa
     # is 0 and can never exceed a threshold) propagates to False
     mx = np.maximum(ll, rl).astype(np.float64)
     lev = np.rint((1.0 - ssn) * mx)
+    # near-exact SSN: write_wrong_digits at its default rate leaves ~94%
+    # of noised SSNs within 2 edits, while random SSN pairs differ by ~7+
+    # digits. BOTH sides must be full SSNs: lev<=2 does not imply equal
+    # lengths, and a 7-digit truncation matches ~100 full SSNs.
     ssn_near = (ll == 9) & (rl == 9) & (lev <= 2)
+    # disagreement threshold sits ABOVE the noise channel's tail:
+    # token_probability 0.1 corrupts >=3 of 9 digits on ~6% of noised
+    # true pairs; lev > 4 keeps ~99.9% of them and refutes random pairs
     ssn_conflict = lv & rv & (lev > 4)
 
     first_missing = ~(_np(aux["l_first_name"].is_valid()) & _np(aux["r_first_name"].is_valid()))
     mid_compat = np.isnan(mid) | (mid == 1.0)
     sex_compat = np.isnan(sex) | (sex == 1.0)
     geo_exact = (zp == 1.0) & (city == 1.0)
+    # both zips present and different: negative evidence in the
+    # name-only tiers (same-household true pairs share the address;
+    # noise breaks it for only ~2% of them)
     geo_conflict = zp == 0.0
+    # 0.65: low enough that one typo in a short name (PAVI/PAUL ~ 0.67)
+    # does not refute a pair other fields support; different people's
+    # first names in the same block sit ~0.5
     veto = jf < 0.65
     evidence = (
         (~np.isnan(jf)).astype(np.int32)
@@ -1060,9 +618,12 @@ def cascade_match_mask(sim, score, aux, threshold=0.92, same_dataset_distinct=Fa
         + (lv & rv)
     )
 
+    # birth-year evidence (from the dob, or reconstructed ref_year-age):
+    # agreement within the misreport_age spread supports a match; a gap
+    # beyond any noise channel refutes one
     def _sane_byear(a):
-        # string cast mirrors the Column cast; byear is digits-or-null
-        # by construction (ANSI mode would have rejected junk upstream)
+        # byear is digits-or-null by construction; digit noise produces
+        # absurd years (7013, 1763), treated as missing, not refuting
         y = _np(pc.cast(a, pa.float64()))
         return np.where((y >= 1850) & (y <= 2100), y, np.nan)
 
@@ -1087,10 +648,16 @@ def cascade_match_mask(sim, score, aux, threshold=0.92, same_dataset_distinct=Fa
         & (evidence >= 3)
         & ~veto
         & ~ssn_conflict
+        # with the first name missing, near-miss dobs are name-collision
+        # bait: demand an exact dob and a non-contradicting sex
         & (np.isnan(jf) | (jf >= 0.78))
         & (~np.isnan(jf) | ((dob == 1.0) & sex_compat))
+        # a high score with NO hard identifier (no dob, no ssn pair) is
+        # just agreeing names
         & (~np.isnan(dob) | (lv & rv))
     )
+    # 0.94 on the first name sits ABOVE the 0.93 nickname-family grant
+    # (a family overlap alone is not near-exact) while admitting typos
     tier4 = (
         np.isnan(dob) & (jf >= 0.94) & (jl >= 0.95)
         & ((mid == 1.0) | geo_exact | byear_agree) & ~byear_conflict
@@ -1102,12 +669,19 @@ def cascade_match_mask(sim, score, aux, threshold=0.92, same_dataset_distinct=Fa
             ((jf >= 0.9) & (dob >= 0.875) & mid_compat)
             | ((jf >= 0.95) & (dob >= 0.55) & (mid == 1.0))
             | ((jf >= 0.95) & (dob >= 0.55) & geo_exact & mid_compat)
+            # deliberately NO (names + dob~0.75 + byear) arm: at 20k
+            # simulants it admitted +209 FP for +150 TP
         )
     )
     tier6 = np.isnan(jl) & (jf >= 0.95) & (dob == 1.0) & mid_compat & sex_compat & ~ssn_conflict
 
     is_match = tier1 | tier1b | tier2 | tier3 | tier4 | tier5 | tier6
     if same_dataset_distinct:
+        # one row per entity per dataset-PERIOD (reference interface.py),
+        # so a same-period pair is a different entity by construction —
+        # except a guardian-duplication twin, which shares its
+        # original's base_rid (verified 1:1 in pipeline._assign_int_ids).
+        # NULL periods compare equal: the conservative whole-dataset veto.
         dup_twin = _np(pc.fill_null(pc.equal(aux["l_base_rid"], aux["r_base_rid"]), False))
         same_ds = _np(pc.fill_null(pc.equal(aux["l_dataset"], aux["r_dataset"]), False))
         lp, rp = aux["l_period"], aux["r_period"]
@@ -1173,28 +747,13 @@ def prune_edges_by_ssn_consensus(edges: DataFrame) -> DataFrame:
     return out.select(*edges.columns).drop("__bare")
 
 
-def match_edges(
-    scored: DataFrame,
-    threshold: float = 0.92,
-    same_dataset_distinct: bool = False,
-    ssn_consensus: bool = True,
-) -> DataFrame:
-    """Tiered match decision (+ identifier-consensus pruning) -> edges
-    for the clustering stage.
-
-    When ``scored`` already carries an ``is_match`` column (the
-    pipeline fuses :func:`tiered_match` into the scoring stage's
-    checkpointed projection — one pass over the full pair set instead
-    of re-deriving the cascade on every downstream scan), the decision
-    is reused as-is."""
-    decided = scored if "is_match" in scored.columns else tiered_match(scored, threshold, same_dataset_distinct)
-    edges = decided.where(F.col("is_match"))
+def match_edges(scored: DataFrame) -> DataFrame:
+    """Matched rows (``MATCH_COLUMNS``, as :func:`match_pairs` emits
+    them) -> edges for the clustering stage, after identifier-consensus
+    pruning."""
+    # The consensus prune scans its input 3x (vote union from both sides
+    # + the final anti-join); pin the — tiny — matched set first so those
+    # scans do not each recompute it.
     keep = ["id_l", "id_r", "score"]
-    if ssn_consensus and "l_ssn_digits" in edges.columns:
-        # The consensus prune scans its input 3x (vote union from both
-        # sides + the final anti-join); pin the — tiny — thresholded
-        # edge set first so those scans do not each re-filter the full
-        # scored pair set.
-        edges = edges.select(*keep, "l_ssn_digits", "r_ssn_digits").localCheckpoint()
-        edges = prune_edges_by_ssn_consensus(edges)
-    return edges.select(*keep)
+    edges = scored.select(*keep, "l_ssn_digits", "r_ssn_digits").localCheckpoint()
+    return prune_edges_by_ssn_consensus(edges).select(*keep)

@@ -47,6 +47,19 @@ def _warm_session(spark: SparkSession) -> None:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _default_driver_memory() -> str:
+    """About half of the host's physical memory (MemTotal), capped at
+    24g: in local mode the driver JVM hosts every executor thread, and
+    a heap sized past the host's memory gets the JVM OOM-killed instead
+    of spilling. 24g when /proc/meminfo is unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{min(kb // 2 // 1024, 24 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "pseudopeople_spark",
     master: str | None = None,
@@ -70,7 +83,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

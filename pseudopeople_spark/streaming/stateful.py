@@ -118,7 +118,7 @@ def link_stream_incremental(
     self-join "same block AND order_l < order_r AND score >=
     threshold".
 
-    ``fields`` is the same ``FieldSpec`` list the batch scorer takes
+    ``fields`` is a ``FieldSpec`` list like ``scoring.DEFAULT_FIELDS``
     (kinds 'jw' | 'lev' | 'dob' | 'exact'); the sims and the
     null-renormalized weighted score come from the SAME engine
     (``scoring._make_sim_engine``) built with the SAME nickname-family
@@ -259,8 +259,7 @@ def link_stream_incremental(
                         combined = pa.array(members[c] + new_vals[c], type=pa.string())
                         col[f"l_{c}"] = combined.take(pa.array(li))
                         col[f"r_{c}"] = combined.take(pa.array(ri))
-                    arrays, names = compute(col, len(li))
-                    score = arrays[names.index("score")].to_numpy(zero_copy_only=False)
+                    _, score = compute(col, len(li))
                     all_ids = ids + new_ids
                     _emit(score, [all_ids[j] for j in li], [all_ids[j] for j in ri], evictions)
                 ids.extend(new_ids)
@@ -277,8 +276,7 @@ def link_stream_incremental(
                         v = _clean(rd[c])
                         col[f"l_{c}"] = pa.array(members[c], type=pa.string())
                         col[f"r_{c}"] = pa.array([v] * m, type=pa.string())
-                    arrays, names = compute(col, m)
-                    score = arrays[names.index("score")].to_numpy(zero_copy_only=False)
+                    _, score = compute(col, m)
                     _emit(score, list(ids), [rd[id_col]] * m, evictions)
                 ids.append(rd[id_col])
                 for c in spec_cols:

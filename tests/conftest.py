@@ -5,6 +5,7 @@ session never leaks state between tests."""
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 
@@ -14,7 +15,10 @@ from tests.fuzzy import fuzzy_assert_proportion
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", master="local[8]", shuffle_partitions=8)
+    # one core per task slot and one shuffle partition per core, from
+    # SPARK_GRAFT_CPUS or the cores this process may run on
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    s = get_spark("tests", master=f"local[{cpus}]", shuffle_partitions=cpus)
     yield s
     s.stop()
 

@@ -3,6 +3,7 @@ configuration/validator.py:258-339): configured levels above the max
 achievable proportion for the queried (dataset, state, year) slice must
 warn — and defaults must not."""
 
+import os
 import warnings
 
 import pytest
@@ -14,6 +15,13 @@ from pseudopeople_spark.proportions import validate_noise_level_proportions
 SAMPLES = "/root/reference/src/pseudopeople/data/sample_datasets"
 
 
+def _require_samples():
+    """Skip, naming the path, where the reference's shipped sample
+    datasets are not installed."""
+    if not os.path.isdir(SAMPLES):
+        pytest.skip(f"reference sample datasets not found at {SAMPLES}")
+
+
 def test_defaults_do_not_warn():
     cfg = get_config()
     with warnings.catch_warnings():
@@ -23,6 +31,7 @@ def test_defaults_do_not_warn():
 
 
 def test_excessive_levels_warn_per_slice():
+    _require_samples()
     cfg = get_config({
         "decennial_census": {
             "row_noise": {
@@ -42,6 +51,7 @@ def test_excessive_levels_warn_per_slice():
 
 
 def test_multi_state_default_falls_back_to_usa():
+    _require_samples()
     cfg = get_config({
         "decennial_census": {
             "column_noise": {"first_name": {"use_nickname": {"cell_probability": 0.99}}}
@@ -58,6 +68,7 @@ def test_missing_metadata_is_silent(tmp_path):
 
 
 def test_guard_fires_through_generate_api(spark):
+    _require_samples()
     from pseudopeople_spark.api import generate_decennial_census
 
     # the shipped sample extract is all-WA; filter and slice on WA

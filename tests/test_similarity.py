@@ -130,31 +130,38 @@ def test_ssn_consensus_pruning(spark):
     assert ("c4", "w7") in kept, "digit-noised variant of the winning SSN must survive"
 
 
-def test_same_dataset_veto_scoped_to_period(spark):
+def test_same_dataset_veto_scoped_to_period():
     """The same-dataset hard veto is scoped to the dataset-PERIOD: a
     2020-census and a 2030-census row of one entity (perfect sims) is a
     legitimate match; two rows in the SAME period stay vetoed, as do
     rows with NULL periods (whole-dataset conservative default)."""
-    from pseudopeople_spark.linkage.scoring import tiered_match
+    import numpy as np
+    import pyarrow as pa
 
-    base = dict(
-        score=1.0, sim_first_name=1.0, sim_last_name=1.0, sim_dob=1.0,
-        sim_middle=1.0, sim_sex=1.0, sim_zipcode=1.0, sim_city=1.0,
-        l_first_name="ALICE", r_first_name="ALICE",
-        l_ssn_digits="123456789", r_ssn_digits="123456789",
-        l_byear="1980", r_byear="1980",
-        l_dataset="census", r_dataset="census",
-    )
-    rows = [
-        {**base, "id_l": "a", "id_r": "b", "l_period": "2020", "r_period": "2030"},
-        {**base, "id_l": "c", "id_r": "d", "l_period": "2020", "r_period": "2020"},
-        {**base, "id_l": "e", "id_r": "f", "l_period": None, "r_period": None},
-    ]
-    scored = spark.createDataFrame(rows)
-    got = {r["id_l"]: r["is_match"] for r in tiered_match(scored, same_dataset_distinct=True).collect()}
-    assert got["a"] is True, "cross-period same-dataset pair must not be hard-vetoed"
-    assert got["c"] is False, "same-period pair stays vetoed"
-    assert got["e"] is False, "null periods keep the whole-dataset veto"
+    from pseudopeople_spark.linkage.scoring import cascade_match_mask
+
+    # rows: a/b cross-period, c/d same period, e/f null periods
+    sims = {
+        f: np.ones(3)
+        for f in ("first_name", "last_name", "dob", "middle", "sex", "zipcode", "city", "ssn_digits")
+    }
+
+    def both(v):
+        return pa.array([v] * 3)
+
+    aux = {
+        "l_first_name": both("ALICE"), "r_first_name": both("ALICE"),
+        "l_ssn_digits": both("123456789"), "r_ssn_digits": both("123456789"),
+        "l_byear": both("1980"), "r_byear": both("1980"),
+        "l_dataset": both("census"), "r_dataset": both("census"),
+        "l_period": pa.array(["2020", "2020", None], pa.string()),
+        "r_period": pa.array(["2030", "2020", None], pa.string()),
+        "l_base_rid": pa.array([1, 3, 5]), "r_base_rid": pa.array([2, 4, 6]),
+    }
+    got = cascade_match_mask(sims, np.ones(3), aux, same_dataset_distinct=True)
+    assert got[0], "cross-period same-dataset pair must not be hard-vetoed"
+    assert not got[1], "same-period pair stays vetoed"
+    assert not got[2], "null periods keep the whole-dataset veto"
 
 
 def test_cross_best_equals_naive_cross_product():

@@ -32,34 +32,23 @@ def worker(n: int, slice_idx: int, n_slices: int) -> None:
     import pyarrow.dataset as ds
 
     from pseudopeople_spark.linkage import scoring
-    from pseudopeople_spark.linkage.pipeline import CANONICAL_FIELDS
 
-    attach = CANONICAL_FIELDS + ["base_rid"]
     rec_tbl = ds.dataset(os.path.join(INPUT_DIR, f"records_int_{n}")).to_table(
-        columns=["record_id"] + attach
+        columns=["record_id", *scoring.LOOKUP_FIELDS]
     )
     pair_tbl = ds.dataset(os.path.join(INPUT_DIR, f"pairs_{n}")).to_table(
         columns=["id_l", "id_r"]
     )
-
-    class _B:
-        value = rec_tbl
-
-    specs = [(s.name, s.kind, s.weight) for s in scoring.DEFAULT_FIELDS]
-    # decide-and-filter mode, exactly the kernel resolve() runs in
-    # production (ResolveConfig defaults: threshold 0.92,
-    # unique_within_dataset True) — the ceiling must measure the SAME
-    # per-pair work as the Spark scoring stage it bounds
-    gen = scoring.make_fused_batches(
-        _B(), "record_id", attach, specs, scoring._nickname_families(), 0, 1,
-        emit_attach=["dataset", "period", "first_name", "byear", "ssn_digits", "base_rid"],
-        decide={"threshold": 0.92, "same_dataset_distinct": True},
-    )
+    lookup = scoring.ArrowIpcLookup(rec_tbl)
+    families = scoring._nickname_families()
     batches = pair_tbl.combine_chunks().to_batches(max_chunksize=20_000)
     mine = batches[slice_idx::n_slices]
     n_pairs = sum(b.num_rows for b in mine)
     t0 = time.time()
-    for _ in gen(iter(mine)):
+    # decisions as resolve() makes them (ResolveConfig defaults:
+    # threshold 0.92, unique_within_dataset True) — the ceiling must
+    # measure the SAME per-pair work as the Spark scoring stage it bounds
+    for _ in scoring.match_batches(iter(mine), lookup, families, 0.92, True):
         pass
     wall = time.time() - t0
     print(json.dumps({"slice": slice_idx, "pairs": n_pairs, "wall": round(wall, 2)}))

@@ -8,13 +8,13 @@ Three modes:
   --prepare <n>       materialize the scoring stage's exact inputs once:
                       int-id records + deduped candidate pairs parquet
                       (same plans resolve() runs, at local[16])
-  --inproc <n>        run the fused kernel driver-side over pyarrow
-                      batches (no Spark) with per-phase timers and an
-                      optional cProfile dump — hypothesis testing in
-                      seconds instead of Spark legs in minutes
+  --inproc <n>        run the scoring batch function driver-side over
+                      pyarrow batches (no Spark) with per-phase timers
+                      and an optional cProfile dump — hypothesis testing
+                      in seconds instead of Spark legs in minutes
   --leg <cores> <n>   one pinned Spark leg timing ONLY the scoring
-                      stage (fused scorer + tiered_match + the slim
-                      projection resolve() checkpoints), noop sink
+                      stage (scoring.match_pairs, as resolve() runs
+                      it), noop sink
 
   default: orchestrate legs at 2 and 8 cores (alternating, 2 reps)
   and print per-level walls + the N->4N scoring efficiency.
@@ -78,35 +78,28 @@ def prepare(n: int) -> None:
 
 
 def inproc(n: int, max_batches: int, profile: bool) -> None:
-    """Driver-side single-threaded run of the fused kernel: exactly the
-    generator score_pairs_fused ships to workers, fed 20k-row batches
-    from the materialized pair parquet. Prints pairs/sec and, with
-    --profile, the cProfile top."""
-    import pyarrow as pa
+    """Driver-side single-threaded run of the scoring batch function
+    the workers run (scoring.match_batches, decisions as resolve()
+    makes them), fed 20k-row batches from the materialized pair
+    parquet over an in-memory records lookup. Prints pairs/sec and,
+    with --profile, the cProfile top."""
     import pyarrow.dataset as ds
 
-    from pseudopeople_spark.linkage.pipeline import CANONICAL_FIELDS
     from pseudopeople_spark.linkage import scoring
 
-    attach = CANONICAL_FIELDS + ["base_rid"]
-    rec_tbl = ds.dataset(_records_path(n)).to_table(columns=["record_id"] + attach)
-    pair_tbl = ds.dataset(_pairs_path(n)).to_table(columns=["id_l", "id_r"])
-
-    class _FakeBroadcast:
-        value = rec_tbl
-
-    specs = [(s.name, s.kind, s.weight) for s in scoring.DEFAULT_FIELDS]
-    families = scoring._nickname_families()
-    gen = scoring.make_fused_batches(
-        _FakeBroadcast(), "record_id", attach, specs, families, 0, 1
+    rec_tbl = ds.dataset(_records_path(n)).to_table(
+        columns=["record_id", *scoring.LOOKUP_FIELDS]
     )
+    pair_tbl = ds.dataset(_pairs_path(n)).to_table(columns=["id_l", "id_r"])
+    lookup = scoring.ArrowIpcLookup(rec_tbl)
+    families = scoring._nickname_families()
     batches = pair_tbl.combine_chunks().to_batches(max_chunksize=20_000)
     if max_batches:
         batches = batches[:max_batches]
     n_pairs = sum(b.num_rows for b in batches)
 
     def _run() -> None:
-        for out in gen(iter(batches)):
+        for _ in scoring.match_batches(iter(batches), lookup, families, 0.92, True):
             pass
 
     if profile:
@@ -131,10 +124,8 @@ def inproc(n: int, max_batches: int, profile: bool) -> None:
 
 
 def leg(cores: int, n: int) -> None:
-    from pyspark.sql import functions as F
-
     from pseudopeople_spark.linkage import scoring
-    from pseudopeople_spark.linkage.pipeline import CANONICAL_FIELDS, ResolveConfig
+    from pseudopeople_spark.linkage.pipeline import ResolveConfig
     from pseudopeople_spark.session import get_spark
 
     cfg = ResolveConfig()
@@ -155,22 +146,13 @@ def leg(cores: int, n: int) -> None:
     per_part = int(os.environ.get("PP_PROFILE_PAIRS_PER_PART", "250000"))
     n_parts = max(cores, -(-n_pairs // per_part))
     pairs = pairs.repartition(n_parts, "id_l").localCheckpoint()
-    attach = [c for c in CANONICAL_FIELDS if c != "state"] + ["base_rid"]
-    emit = ["dataset", "period", "first_name", "byear", "ssn_digits", "base_rid"]
+    n_records = records.count()
     t0 = time.time()
-    keep = ["id_l", "id_r", "score", "is_match", "l_ssn_digits", "r_ssn_digits"]
-    if os.environ.get("PP_SCORING_DECIDE", "1") != "0":
-        out = scoring.score_pairs_fused(
-            spark, pairs, records, attach, emit_attach=emit,
-            decide={"threshold": cfg.threshold, "same_dataset_distinct": True},
-        )
-        t_setup = time.time() - t0
-        out.write.mode("overwrite").format("noop").save()
-    else:
-        out = scoring.score_pairs_fused(spark, pairs, records, attach, emit_attach=emit)
-        t_setup = time.time() - t0  # scratch lookup write (eager part)
-        out = scoring.tiered_match(out, cfg.threshold, same_dataset_distinct=True)
-        out.select(*keep).where(F.col("is_match")).write.mode("overwrite").format("noop").save()
+    out = scoring.match_pairs(
+        pairs, records, n_records, threshold=cfg.threshold, same_dataset_distinct=True
+    )
+    t_setup = time.time() - t0  # lookup set-up (the eager part)
+    out.write.mode("overwrite").format("noop").save()
     wall = round(time.time() - t0, 2)
     print(json.dumps({
         "cores": cores, "n": n, "pairs": n_pairs, "scoring_sec": wall,

@@ -72,7 +72,6 @@ def main() -> None:
     # parallelize — attribute it):
     from pseudopeople_spark.linkage import pairs as pairgen
     from pseudopeople_spark.linkage import scoring
-    from pseudopeople_spark.linkage.pipeline import CANONICAL_FIELDS
 
     raw_pairs = pairgen.pairs_from_blocks(blocks, max_block_size=rcfg.max_block_size, dedup=False)
     snb = blocking.sorted_neighborhood_pairs(
@@ -87,13 +86,14 @@ def main() -> None:
     n_pairs = cand.count()
     t["n_pairs"] = n_pairs
 
-    # scoring sub-parts
-    with_fields = scoring.attach_pair_fields(cand, records, CANONICAL_FIELDS)
+    # scoring sub-parts: the co-partitioned attach joins alone (the
+    # large-input regime's extra cost), then the stage as resolve() runs it
+    with_fields = scoring.attach_pair_fields(cand, records, list(scoring.LOOKUP_FIELDS))
     timed("scoring_attach_count", lambda: with_fields.count())
-    scored_wide = scoring.score_pairs(with_fields)
-    decided = scoring.tiered_match(scored_wide, rcfg.threshold, same_dataset_distinct=True)
-    slim = decided.select("id_l", "id_r", "score", "is_match", "l_ssn_digits", "r_ssn_digits")
-    timed("scoring_full_ckpt", lambda: _capped_local_checkpoint(slim).count())
+    matched = scoring.match_pairs(
+        cand, records, n_records, threshold=rcfg.threshold, same_dataset_distinct=True
+    )
+    timed("scoring_full_ckpt", lambda: _capped_local_checkpoint(matched).count())
 
     # clustering sub-parts on the real edge distribution: fabricate edges
     # from blocks the same way the pipeline would end up with matches —
