@@ -84,18 +84,6 @@ def bands_from_signatures(sigs: DataFrame, bands: int = 4) -> DataFrame:
     return out
 
 
-def simhash_bands(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bands: int = 4) -> DataFrame:
-    """(band_key, id, simhash) from raw text — see
-    :func:`bands_from_signatures`. The signature UDF is evaluated once
-    per output branch of THIS plan; multi-branch callers should go
-    through :func:`simhash_signatures` + a checkpoint instead."""
-    return bands_from_signatures(simhash_signatures(df, text_col, id_col), bands=bands)
-
-
-def hamming64(a, b):
-    return F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
-
-
 def simhash_near_dups(
     df: DataFrame,
     text_col: str = "text",

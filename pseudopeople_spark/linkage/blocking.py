@@ -30,46 +30,33 @@ from pyspark.sql import functions as F
 
 from pseudopeople_spark.functions.similarity import double_metaphone_udf, ngrams_padded
 
-BLOCK_SCHEMA = ["block_key", "record_id"]
+# neighbors each record is paired with in the sorted-neighborhood pass
+SNB_WINDOW = 3
 
 
-def _kv(df: DataFrame, key: Column, prefix: str, id_col: str) -> DataFrame:
-    return (
-        df.select(F.concat(F.lit(prefix + ":"), key).alias("block_key"), F.col(id_col).alias("record_id"))
-        .where(F.col("block_key").isNotNull())
-    )
-
-
-def sorted_neighborhood_pairs(
-    df: DataFrame,
-    sort_cols: "list[str]",
-    id_col: str = "record_id",
-    window_size: int = 3,
-    partition_expr: Column | None = None,
-) -> DataFrame:
+def sorted_neighborhood_pairs(df: DataFrame, sort_cols: "list[str]") -> DataFrame:
     """Sorted-neighborhood blocking: sort by a composite key, pair each
-    record with its next ``window_size`` neighbors via ``lead()``
+    record with its next ``SNB_WINDOW`` neighbors via ``lead()``
     (SURVEY.md §2.E "window functions" — absent in the reference, core
     for us).
 
     At cluster scale a single global sort is one range-partitioned
-    shuffle; we additionally partition the window by the first character
-    of the sort key (``partition_expr``) so the window itself never
-    funnels through one task. Returns (id_l, id_r, block_key)."""
+    shuffle; we additionally partition the window by a prefix of the
+    sort key so the window itself never funnels through one task.
+    Returns (id_l, id_r, block_key)."""
     key = F.concat_ws("\x01", *[F.coalesce(F.col(c), F.lit("")) for c in sort_cols])
-    base = df.select(F.col(id_col), key.alias("_snk"))
+    base = df.select(F.col("record_id"), key.alias("_snk"))
     # window partitioned by a 2-char sort-key prefix: a 1-char prefix
     # gives ~26 Zipf-skewed partitions whose head serializes the stage
     # (Amdahl) at high parallelism; 2 chars -> ~500 partitions. Pairs
     # that straddle a prefix boundary are the standard windowed-SNB
     # loss, covered by the phonetic/MinHash passes.
-    part = partition_expr if partition_expr is not None else F.substring(F.col("_snk"), 1, 2)
-    w = Window.partitionBy(part).orderBy(F.col("_snk"), F.col(id_col))
+    w = Window.partitionBy(F.substring(F.col("_snk"), 1, 2)).orderBy(F.col("_snk"), F.col("record_id"))
     # all lead(k) neighbors in ONE window pass — a per-k union would
-    # re-exchange and re-sort the whole table window_size times
+    # re-exchange and re-sort the whole table SNB_WINDOW times
     leads = base.select(
-        F.col(id_col).alias("id_l"),
-        F.array(*[F.lead(F.col(id_col), k).over(w) for k in range(1, window_size + 1)]).alias("_nbrs"),
+        F.col("record_id").alias("id_l"),
+        F.array(*[F.lead(F.col("record_id"), k).over(w) for k in range(1, SNB_WINDOW + 1)]).alias("_nbrs"),
     )
     pairs = leads.select("id_l", F.explode("_nbrs").alias("id_r")).where(F.col("id_r").isNotNull())
     return pairs.select(
@@ -109,42 +96,34 @@ def snb_partition_histogram(
     }
 
 
-def minhash_blocks(
-    df: DataFrame,
-    text_expr: Column,
-    id_col: str = "record_id",
-    bands: int = 4,
-    rows_per_band: int = 2,
-    seed: int = 1337,
-) -> DataFrame:
+# MinHash-LSH banding: MINHASH_BANDS band keys of MINHASH_ROWS hashes each
+MINHASH_BANDS = 4
+MINHASH_ROWS = 2
+
+
+def minhash_blocks(df: DataFrame, text_expr: Column) -> DataFrame:
     """MinHash-LSH banding over character 3-gram shingles, implemented
     directly with built-ins (explicit variant of Spark ML's MinHashLSH —
     SURVEY.md §7.2): per hash function h_i, signature_i = min over
     shingles of xxhash64(shingle, i); band key = concat of r signatures.
-    Pure JVM expressions: shingles via sequence/transform, min via
-    array_min of transform — no UDF, no explode, no extra shuffle."""
-    base = df.where(text_expr.isNotNull() & (F.length(text_expr) > 0))
-    sig_table = _minhash_sig_table(base, text_expr, id_col, bands * rows_per_band, seed)
+    Returns (block_key, record_id)."""
+    rows = MINHASH_ROWS
+    sig_table = _minhash_sig_table(df, text_expr, MINHASH_BANDS * rows, 1337)
     keyed = sig_table.select(
         "record_id",
         *[
             F.concat(
                 F.lit(f"mh{b}:"),
-                F.concat_ws(
-                    "_",
-                    *[_sig_str(F.col(f"c{b * rows_per_band + r}")) for r in range(rows_per_band)],
-                ),
+                F.concat_ws("_", *[_sig_str(F.col(f"c{b * rows + r}")) for r in range(rows)]),
             ).alias(f"mh{b}")
-            for b in range(bands)
+            for b in range(MINHASH_BANDS)
         ],
     )
-    stack = f"stack({bands}, " + ", ".join(f"mh{b}" for b in range(bands)) + ") AS block_key"
+    stack = f"stack({MINHASH_BANDS}, " + ", ".join(f"mh{b}" for b in range(MINHASH_BANDS)) + ") AS block_key"
     return keyed.selectExpr("record_id", stack).select("block_key", "record_id")
 
 
-def _minhash_sig_table(
-    df: DataFrame, text_expr: Column, id_col: str, n_hashes: int, seed: int
-) -> DataFrame:
+def _minhash_sig_table(df: DataFrame, text_expr: Column, n_hashes: int, seed: int) -> DataFrame:
     """(record_id, c0..c{n-1}) MinHash signature table via explode +
     hash-aggregate — the formulation that stays inside whole-stage
     codegen. Per-row array folds (``aggregate``/``transform`` +
@@ -155,7 +134,7 @@ def _minhash_sig_table(
     codegen'd (~20x faster) and the map-side partial aggregate shrinks
     the shuffle back to one row per record before it moves."""
     shingles = F.explode(ngrams_padded(text_expr, 3)).alias("_sh")
-    exploded = df.select(F.col(id_col).alias("record_id"), shingles)
+    exploded = df.select(F.col("record_id"), shingles)
     aggs = [
         F.min(F.xxhash64(F.lit(seed + i), F.col("_sh"))).alias(f"c{i}") for i in range(n_hashes)
     ]
@@ -167,16 +146,7 @@ def _sig_str(sig: Column) -> Column:
     return F.conv(F.pmod(sig, F.lit(2**62)).cast("string"), 10, 36)
 
 
-def all_block_keys(
-    df: DataFrame,
-    id_col: str = "record_id",
-    last_col: str = "last_name",
-    first_col: str = "first_name",
-    dob_col: str = "dob",
-    ssn_col: str = "ssn_digits",
-    minhash_bands: int = 4,
-    minhash_rows: int = 2,
-) -> DataFrame:
+def all_block_keys(df: DataFrame) -> DataFrame:
     """All non-MinHash passes in ONE narrow projection + one ``stack``
     unpivot (a single scan and a single metaphone-UDF evaluation); the
     MinHash band keys come from the explode + hash-aggregate signature
@@ -184,25 +154,27 @@ def all_block_keys(
     union in. At 10^12 docs the blocking stage is scan-bound, so pass
     count must not multiply scans.
 
-    Emits (block_key, record_id) for: soundex+year, double-metaphone
-    primary/secondary+year, SSN exact, and b MinHash band keys."""
-    year = F.coalesce(F.substring(F.col(dob_col), 1, 4), F.lit("x"))
-    dm = double_metaphone_udf(F.col(last_col))
+    Emits (block_key, record_id, _sweep) for: soundex+year,
+    double-metaphone primary/secondary+year, SSN exact, first-name
+    soundex+dob, last+first soundex, and the MinHash band keys over
+    "first last"."""
+    year = F.coalesce(F.substring(F.col("dob"), 1, 4), F.lit("x"))
+    dm = double_metaphone_udf(F.col("last_name"))
     name_text = F.concat_ws(
-        " ", F.coalesce(F.col(first_col), F.lit("")), F.coalesce(F.col(last_col), F.lit(""))
+        " ", F.coalesce(F.col("first_name"), F.lit("")), F.coalesce(F.col("last_name"), F.lit(""))
     )
 
     key_cols = {
         "sdx": F.when(
-            F.col(last_col).isNotNull(),
-            F.concat(F.lit("sdx:"), F.soundex(F.upper(F.col(last_col))), F.lit("|"), year),
+            F.col("last_name").isNotNull(),
+            F.concat(F.lit("sdx:"), F.soundex(F.upper(F.col("last_name"))), F.lit("|"), year),
         ),
         "dmp": F.when(dm["primary"] != "", F.concat(F.lit("dmp:"), dm["primary"], F.lit("|"), year)),
         "dms": F.when(
             dm["secondary"] != dm["primary"],
             F.concat(F.lit("dms:"), dm["secondary"], F.lit("|"), year),
         ),
-        "ssn": F.when(F.length(ssn_col) == 9, F.concat(F.lit("ssn:"), F.col(ssn_col))),
+        "ssn": F.when(F.length("ssn_digits") == 9, F.concat(F.lit("ssn:"), F.col("ssn_digits"))),
         # Recall passes for the two dominant miss modes measured at 300k
         # (tools/diag_blocking_recall.py, round 5): 55% of missed true
         # pairs had last_name BLANKED/corrupted on one side with the
@@ -211,16 +183,16 @@ def all_block_keys(
         # breaks every phonetic key). Neither mode is exotic — they are
         # the leave_blank + wrong-digits noise channels doing their job.
         "fnd": F.when(
-            F.col(first_col).isNotNull() & (F.length(dob_col) == 8),
-            F.concat(F.lit("fnd:"), F.soundex(F.upper(F.col(first_col))), F.lit("|"), F.col(dob_col)),
+            F.col("first_name").isNotNull() & (F.length("dob") == 8),
+            F.concat(F.lit("fnd:"), F.soundex(F.upper(F.col("first_name"))), F.lit("|"), F.col("dob")),
         ),
         "nys": F.when(
-            F.col(first_col).isNotNull() & F.col(last_col).isNotNull(),
+            F.col("first_name").isNotNull() & F.col("last_name").isNotNull(),
             F.concat(
                 F.lit("nys:"),
-                F.soundex(F.upper(F.col(last_col))),
+                F.soundex(F.upper(F.col("last_name"))),
                 F.lit("|"),
-                F.soundex(F.upper(F.col(first_col))),
+                F.soundex(F.upper(F.col("first_name"))),
             ),
         ),
     }
@@ -231,62 +203,20 @@ def all_block_keys(
     # same-dob pairs — ordering the sweep window by dob makes same-dob
     # records adjacent at the SAME pair budget (round-5 verdict #1).
     keyed = df.select(
-        F.col(id_col).alias("record_id"),
-        F.coalesce(F.col(dob_col), F.lit("")).alias("_sweep"),
+        F.col("record_id"),
+        F.coalesce(F.col("dob"), F.lit("")).alias("_sweep"),
         *[v.alias(k) for k, v in key_cols.items()],
     )
     names = list(key_cols)
     stack_expr = f"stack({len(names)}, " + ", ".join(f"{n}" for n in names) + ") AS block_key"
     out = keyed.selectExpr("record_id", "_sweep", stack_expr).where(F.col("block_key").isNotNull())
 
-    if minhash_bands:
-        mh_base = df.where(F.length(name_text) > 1).select(
-            F.col(id_col).alias("record_id"), name_text.alias("_nm")
-        )
-        sig_table = _minhash_sig_table(
-            mh_base, F.col("_nm"), "record_id", minhash_bands * minhash_rows, 1337
-        )
-        mh_keyed = sig_table.select(
-            "record_id",
-            *[
-                F.concat(
-                    F.lit(f"mh{b}:"),
-                    F.concat_ws(
-                        "_",
-                        *[
-                            _sig_str(F.col(f"c{b * minhash_rows + r}"))
-                            for r in range(minhash_rows)
-                        ],
-                    ),
-                ).alias(f"mh{b}")
-                for b in range(minhash_bands)
-            ],
-        )
-        mh_stack = (
-            f"stack({minhash_bands}, "
-            + ", ".join(f"mh{b}" for b in range(minhash_bands))
-            + ") AS block_key"
-        )
-        # MinHash bands are hash-uniform (never the Zipf head), so they
-        # skip the dob carry: _sweep NULL keeps the shingle-exploded
-        # shuffle narrow, and the sweep window's (_sweep, record_id)
-        # order degrades to plain record_id order within these blocks
-        # (a block's rows all come from one pass - keys are prefixed).
-        out = out.unionByName(
-            mh_keyed.selectExpr("record_id", mh_stack)
-            .select("record_id", F.lit(None).cast("string").alias("_sweep"), "block_key")
-        )
-    return out
-
-
-def block_size_stats(blocks: DataFrame) -> DataFrame:
-    """Block-size histogram — the skew diagnostic recorded in stage
-    metrics (SURVEY.md §7.3)."""
-    sizes = blocks.groupBy("block_key").agg(F.count("*").alias("n"))
-    return sizes.groupBy().agg(
-        F.count("*").alias("n_blocks"),
-        F.max("n").alias("max_block"),
-        F.expr("percentile_approx(n, 0.5)").alias("p50"),
-        F.expr("percentile_approx(n, 0.99)").alias("p99"),
-        F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("candidate_pairs_upper_bound"),
+    # MinHash bands are hash-uniform (never the Zipf head), so they
+    # skip the dob carry: _sweep NULL keeps the shingle-exploded
+    # shuffle narrow, and the sweep window's (_sweep, record_id) order
+    # degrades to plain record_id order within these blocks (a block's
+    # rows all come from one pass - keys are prefixed).
+    mh = minhash_blocks(df.where(F.length(name_text) > 1), name_text)
+    return out.unionByName(
+        mh.select("record_id", F.lit(None).cast("string").alias("_sweep"), "block_key")
     )

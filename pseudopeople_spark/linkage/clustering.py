@@ -6,7 +6,7 @@ Why this algorithm: it converges in O(log^2 n) rounds on any graph,
 every round is two groupBy-aggregations — no vertex-program framework,
 no GraphFrames dependency, and it is the shape that survives 10^12
 nodes (each round's shuffle is on node id, uniformly distributed by
-construction since node ids are xxhash64 of record ids).
+construction since node ids are xxhash64-derived record rids).
 
 Driver responsibilities (SURVEY.md §4 #2):
   * ``localCheckpoint()`` every round to truncate lineage — naive loops
@@ -15,8 +15,9 @@ Driver responsibilities (SURVEY.md §4 #2):
     unchanged — one lightweight action per round, no expensive
     ``exceptAll``.
 
-Node ids are int64 (xxhash64 of record ids, collision odds ~n²/2⁶⁴;
-the id->record mapping is kept and re-joined at the end).
+Node ids are the int64 record rids (pipeline._assign_int_ids: salted
+xxhash64 of the record ids, verified unique; the rid->record mapping is
+kept and re-joined at the end).
 """
 
 from __future__ import annotations
@@ -62,8 +63,38 @@ def _fingerprint(edges: DataFrame) -> "tuple[int, int]":
     return int(row["n"]), int(row["h"])
 
 
+def min_labels(u, v):
+    """(ids, labels) for an int64 edge list: the sorted distinct node
+    ids and each one's component label, the component's MIN id — the
+    label the star-rounds (and the DuckDB oracle) converge to.
+
+    Vectorized min-label propagation with pointer jumping: a scalar
+    union-find loop in Python costs ~8 s/1M edges of pure driver time —
+    a FIXED, parallelism-independent cost that caps scaling efficiency;
+    this converges in O(log diameter) vectorized passes, well under 1 s
+    at the 2M-edge cap."""
+    import numpy as np
+
+    ids = np.unique(np.concatenate([u, v]))
+    iu = np.searchsorted(ids, u)
+    iv = np.searchsorted(ids, v)
+    ends = np.concatenate([iu, iv])
+    parent = np.arange(len(ids), dtype="int64")
+    while True:
+        m = np.minimum(parent[iu], parent[iv])
+        nxt = parent.copy()
+        np.minimum.at(nxt, ends, np.concatenate([m, m]))  # both endpoints take the edge min
+        nxt = nxt[nxt]  # pointer jumping halves chain depth per pass
+        if np.array_equal(nxt, parent):
+            break
+        parent = nxt
+    return ids, ids[parent]
+
+
 def _local_union_find(edges: DataFrame) -> DataFrame:
-    """Finish a SMALL edge set with a driver-local union-find.
+    """Finish a SMALL edge set with a driver-local union-find
+    (:func:`min_labels`); returns (u, v) star edges node -> component
+    min for every non-root node.
 
     Why: each distributed star-round costs 2 shuffles + a checkpoint +
     a fingerprint action of FIXED latency; once the active edge set
@@ -74,37 +105,15 @@ def _local_union_find(edges: DataFrame) -> DataFrame:
     nodes the star-edge set never shrinks below the node count, the cap
     never triggers, and the loop stays fully distributed.
     """
-    import numpy as np
     import pandas as pd
 
     pdf = edges.select("u", "v").toPandas()  # Arrow batch transfer
     spark = edges.sparkSession
     if len(pdf) == 0:
         return spark.createDataFrame([], schema="u long, v long")
-    u = pdf["u"].to_numpy(dtype="int64")
-    v = pdf["v"].to_numpy(dtype="int64")
-    # Vectorized min-label propagation with pointer jumping (a scalar
-    # union-find loop in Python costs ~8 s/1M edges of pure driver
-    # time — a FIXED, parallelism-independent cost that caps scaling
-    # efficiency; this converges in O(log diameter) vectorized passes,
-    # well under 1 s at the 2M-edge cap). Labels decrease monotonically
-    # to the component MIN id — the same label the star-rounds (and the
-    # DuckDB oracle) converge to.
-    ids = np.unique(np.concatenate([u, v]))
-    iu = np.searchsorted(ids, u)
-    iv = np.searchsorted(ids, v)
-    parent = np.arange(len(ids), dtype="int64")
-    while True:
-        m = np.minimum(parent[iu], parent[iv])
-        nxt = parent.copy()
-        np.minimum.at(nxt, iu, m)
-        np.minimum.at(nxt, iv, m)
-        nxt = nxt[nxt]  # pointer jumping halves chain depth per pass
-        if np.array_equal(nxt, parent):
-            break
-        parent = nxt
-    nonroot = parent != np.arange(len(ids), dtype="int64")
-    out = pd.DataFrame({"u": ids[nonroot], "v": ids[parent[nonroot]]})
+    ids, labels = min_labels(pdf["u"].to_numpy(dtype="int64"), pdf["v"].to_numpy(dtype="int64"))
+    nonroot = labels != ids
+    out = pd.DataFrame({"u": ids[nonroot], "v": labels[nonroot]})
     if len(out) == 0:
         return spark.createDataFrame([], schema="u long, v long")
     return spark.createDataFrame(out)
@@ -119,7 +128,6 @@ LOCAL_FINISH_MAX_EDGES = 2_000_000
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 25,
-    checkpoint_every: int = 1,
     local_finish_max_edges: int = LOCAL_FINISH_MAX_EDGES,
 ) -> DataFrame:
     """edges: (u:int64, v:int64) -> assignments (u:int64, component:int64).
@@ -149,93 +157,50 @@ def connected_components(
         e = e.repartition(parts).localCheckpoint()
     import concurrent.futures
 
-    # Speculative overlap only pays when rounds are expensive: on big
-    # edge sets the fingerprint of the PREVIOUS round runs concurrently
-    # with the next round's materialization (one serial action per round
-    # instead of two); on tiny graphs the wasted speculative round after
-    # convergence costs more than it saves.
-    speculate = n_edges >= 100_000
+    # Speculative overlap: the fingerprint of the PREVIOUS round runs
+    # concurrently with the next round's materialization — one serial
+    # action per round instead of two. The loop only runs above the
+    # local-finish cap, where rounds are expensive enough that the one
+    # wasted round after convergence is cheap by comparison.
     prev_fp = None
     with concurrent.futures.ThreadPoolExecutor(max_workers=1) as pool:
         for i in range(max_iterations):
             # two star-rounds per driver round-trip: halves the number
-            # of checkpoint+fingerprint jobs (the loop is task-launch-
-            # bound on small edge sets; extra converged rounds are
+            # of checkpoint+fingerprint jobs (extra converged rounds are
             # idempotent)
-            if speculate:
-                nxt = _small_star(_large_star(e))
-                nxt = _small_star(_large_star(nxt))
-                fp_future = pool.submit(_fingerprint, e) if i > 0 else None
-                nxt = nxt.localCheckpoint()
-                fp = fp_future.result() if fp_future is not None else None
-                if fp is not None and fp == prev_fp:
-                    break
-                prev_fp = fp
-                e = nxt
-                # star-rounds preserve connectivity, so once the active
-                # edge set is small a local union-find finish is exact
-                if fp is not None and fp[0] <= local_finish_max_edges:
-                    e = _local_union_find(e)
-                    break
-            else:
-                e = _small_star(_large_star(e))
-                e = _small_star(_large_star(e))
-                e = e.localCheckpoint()
-                fp = _fingerprint(e)
-                if fp == prev_fp:
-                    break
-                prev_fp = fp
-                if fp[0] <= local_finish_max_edges:
-                    e = _local_union_find(e)
-                    break
+            nxt = _small_star(_large_star(e))
+            nxt = _small_star(_large_star(nxt))
+            fp_future = pool.submit(_fingerprint, e) if i > 0 else None
+            nxt = nxt.localCheckpoint()
+            fp = fp_future.result() if fp_future is not None else None
+            if fp is not None and fp == prev_fp:
+                break
+            prev_fp = fp
+            e = nxt
+            # star-rounds preserve connectivity, so once the active
+            # edge set is small a local union-find finish is exact
+            if fp is not None and fp[0] <= local_finish_max_edges:
+                e = _local_union_find(e)
+                break
     # star edges now point node -> component min; include roots themselves
     assign = e.select(F.col("u"), F.col("v").alias("component"))
     roots = e.select(F.col("v").alias("u"), F.col("v").alias("component")).distinct()
     return assign.union(roots).groupBy("u").agg(F.min("component").alias("component"))
 
 
-def cluster_records(
-    edges_by_record: DataFrame,
-    all_records: DataFrame,
-    id_col: str = "record_id",
-    ids_unique: bool = True,
-) -> DataFrame:
+def cluster_records(edges_by_record: DataFrame, all_records: DataFrame) -> DataFrame:
     """(id_l, id_r) match edges -> (record_id, cluster_id) covering ALL
-    records (singletons keep their own hash as cluster id).
+    records (singletons keep their own id as cluster id).
 
-    ``ids_unique=True`` (the pipeline's case: record_ids are unique by
-    construction — dataset-prefixed, guardian twins suffixed ``_dup``)
-    skips a full shuffle of the record set that a defensive
-    ``distinct`` would cost; pass False for inputs that may repeat
-    ids.
-
-    When the id column AND both edge endpoints are already int64 (the
-    rid pipeline, where _assign_int_ids VERIFIED uniqueness on the
-    materialized data) they are used as graph node ids directly —
-    re-hashing a verified-unique surrogate with a second xxhash64 would
-    put the clustering domain on an UNverified hash (a collision there
-    silently merges two records) and pay a wasted pass over the record
-    set. String-id callers keep the xxhash64 node mapping (collision
-    odds ~n²/2⁶⁴, documented above)."""
-    ids = all_records.select(F.col(id_col).alias("record_id"))
-    if not ids_unique:
-        ids = ids.distinct()
-    edge_types = dict(edges_by_record.dtypes)
-    all_long = (
-        dict(all_records.dtypes).get(id_col) == "bigint"
-        and edge_types.get("id_l") == "bigint"
-        and edge_types.get("id_r") == "bigint"
+    Record ids are the pipeline's int64 rids, which _assign_int_ids
+    VERIFIED unique on the materialized data, so they are the graph
+    node ids directly: no re-hash onto an unverified second hash, and
+    no ``distinct`` shuffle of the record set."""
+    comp = connected_components(
+        edges_by_record.select(F.col("id_l").alias("u"), F.col("id_r").alias("v"))
     )
-    if all_long:
-        ids = ids.withColumn("u", F.col("record_id"))
-        edges = edges_by_record.select(F.col("id_l").alias("u"), F.col("id_r").alias("v"))
-    else:
-        ids = ids.withColumn("u", F.xxhash64("record_id"))
-        edges = edges_by_record.select(
-            F.xxhash64("id_l").alias("u"), F.xxhash64("id_r").alias("v")
-        )
-    comp = connected_components(edges)
     return (
-        ids.join(comp, "u", "left")
-        .select("record_id", F.coalesce("component", F.col("u")).alias("cluster_id"))
+        all_records.select(F.col("record_id").alias("u"))
+        .join(comp, "u", "left")
+        .select(F.col("u").alias("record_id"), F.coalesce("component", F.col("u")).alias("cluster_id"))
     )

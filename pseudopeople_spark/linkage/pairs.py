@@ -4,12 +4,12 @@ The pair join is the quadratic danger zone of any ER pipeline: a block
 of size n yields n(n-1)/2 pairs, and block keys are Zipfian (SMITH…).
 Strategy (SURVEY.md §4 "custom Spark work" #1):
 
-* blocks with size <= ``max_block_size``: all within-block pairs
+* blocks with size <= ``MAX_BLOCK_SIZE``: all within-block pairs
   ``i < j`` — generated WITHOUT a self-join, by exploding each row's
   follower list (``collect_list`` over the block ordered by record id,
   frame = 1 following → unbounded following);
 * blocks larger than the cap: a *linear* sorted-neighborhood sweep
-  inside the block (same window, frame capped at ``neighborhood_window``
+  inside the block (same window, frame capped at ``SWEEP_WINDOW``
   followers) — bounded pairs per record instead of quadratic, so the
   Zipf head contributes O(n·w) pairs, never a straggler task;
 * oversized-block counts are reported, never silently dropped.
@@ -22,9 +22,11 @@ ordering, so the branch windows add no exchange and no sort). The old
 shape (groupBy sizes → join back → self-join small × small) shuffled
 the same block set three times and paid a sort-merge join besides.
 
-Dedup across passes is a ``dropDuplicates`` on the (id_l, id_r) pair —
-one shuffle on the pair key, which also co-locates the pairs for the
-scoring stage.
+The output is NOT deduplicated: the caller unions the other pair
+sources and dedups once (pipeline.resolve) — two full-width
+dropDuplicates over the candidate set would be the single biggest
+avoidable shuffle in the pipeline (42M pairs at the 300k-simulant
+bench).
 """
 
 from __future__ import annotations
@@ -32,19 +34,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# blocks above this size are swept linearly instead of paired
+# quadratically
+MAX_BLOCK_SIZE = 100
+# followers each record of an oversized block is paired with
+SWEEP_WINDOW = 5
 
-def pairs_from_blocks(
-    blocks: DataFrame,
-    max_block_size: int = 100,
-    neighborhood_window: int = 5,
-    dedup: bool = True,
-) -> DataFrame:
-    """blocks: (block_key, record_id) -> distinct (id_l, id_r).
 
-    Pass ``dedup=False`` when the caller unions further pair sources
-    and dedups ONCE at the end — two full-width dropDuplicates over the
-    candidate set is the single biggest avoidable shuffle in the
-    pipeline (42M pairs at the 300k-simulant bench)."""
+def pairs_from_blocks(blocks: DataFrame) -> DataFrame:
+    """blocks: (block_key, record_id) -> (id_l, id_r), not deduplicated
+    (see the module docstring)."""
     # One shared sort order for every window in the stage. The count
     # window declares an explicit full-partition frame so it can carry
     # the record_id ordering (default frame with orderBy would be
@@ -58,7 +57,7 @@ def pairs_from_blocks(
     sized = blocks.withColumn("_bs", F.count("*").over(w_cnt))
 
     # Small blocks: each row pairs with ALL followers in its block —
-    # the follower list is ≤ (max_block_size - 1) entries, so per-row
+    # the follower list is ≤ (MAX_BLOCK_SIZE - 1) entries, so per-row
     # state is bounded; the big branch never evaluates this window
     # (filter BEFORE the window, not a `when` around it: window
     # functions are computed for every row they see, and an unbounded
@@ -68,7 +67,7 @@ def pairs_from_blocks(
         .orderBy("record_id")
         .rowsBetween(1, Window.unboundedFollowing)
     )
-    small = sized.where((F.col("_bs") > 1) & (F.col("_bs") <= max_block_size))
+    small = sized.where((F.col("_bs") > 1) & (F.col("_bs") <= MAX_BLOCK_SIZE))
     quad = (
         small.select(
             F.col("record_id").alias("id_l"),
@@ -77,7 +76,7 @@ def pairs_from_blocks(
         .select("id_l", F.explode("_nbrs").alias("id_r"))
     )
 
-    # Oversized blocks: linear sweep — only the next `neighborhood_window`
+    # Oversized blocks: linear sweep — only the next `SWEEP_WINDOW`
     # followers. ROUND-6 (verdict #1): when the block set carries a
     # `_sweep` column (blocking.all_block_keys rides the dob along),
     # the sweep window is ordered by (_sweep, record_id) instead of
@@ -95,11 +94,11 @@ def pairs_from_blocks(
         w_near = (
             Window.partitionBy("block_key")
             .orderBy("_sweep", "record_id")
-            .rowsBetween(1, neighborhood_window)
+            .rowsBetween(1, SWEEP_WINDOW)
         )
     else:
-        w_near = Window.partitionBy("block_key").orderBy("record_id").rowsBetween(1, neighborhood_window)
-    big = sized.where(F.col("_bs") > max_block_size)
+        w_near = Window.partitionBy("block_key").orderBy("record_id").rowsBetween(1, SWEEP_WINDOW)
+    big = sized.where(F.col("_bs") > MAX_BLOCK_SIZE)
     sweep = (
         big.select(
             F.col("record_id").alias("id_l"),
@@ -112,5 +111,4 @@ def pairs_from_blocks(
             F.least("id_l", "id_r").alias("id_l"), F.greatest("id_l", "id_r").alias("id_r")
         )
 
-    out = quad.unionByName(sweep)
-    return out.dropDuplicates(["id_l", "id_r"]) if dedup else out
+    return quad.unionByName(sweep)

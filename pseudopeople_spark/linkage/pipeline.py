@@ -1,12 +1,17 @@
-"""End-to-end entity-resolution pipeline:
+"""End-to-end entity-resolution pipeline, one physical path per stage:
 
-    span docs -> decode -> normalize -> multi-pass blocking ->
-    skew-aware pair gen -> batched scoring -> thresholded edges ->
-    large-star/small-star connected components -> clusters
+    normalize (int64 rids) -> multi-pass blocking -> skew-aware pair
+    gen + sorted neighborhood -> one dedup -> scoring + match cascade ->
+    connected components + constraint refine -> clusters
+
+``ResolveConfig`` holds the only two settings (match threshold,
+checkpoint directory). Where a stage has a second shape it is for a
+measured size regime, switched by a named count: the scoring lookup by
+``scoring.SMALL_LOOKUP_MAX_ROWS`` / ``LOOKUP_MAX_ROWS``, clustering by
+``clustering.LOCAL_FINISH_MAX_EDGES``.
 
 Every stage boundary is an optional checkpoint (StageCheckpointer);
-each stage's KPIs (block-size histogram, candidate-pair count, match
-rate) land in the stage metrics.
+resolve() returns each stage's wall clock in ``stage_seconds``.
 
 Stage shuffle budget (the thing that matters at 10^12 docs):
   1 shuffle for pair dedup (hash on id_l),
@@ -20,6 +25,7 @@ Stage shuffle budget (the thing that matters at 10^12 docs):
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import ClassVar
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,32 +33,27 @@ from pyspark.sql import functions as F
 from pseudopeople_spark.checkpoint import StageCheckpointer
 from pseudopeople_spark.operators.assets import FAKE_FIRST_NAMES, FAKE_LAST_NAMES
 from pseudopeople_spark.linkage import blocking, pairs as pairgen, refine, scoring
-from pseudopeople_spark.linkage.clustering import cluster_records
+from pseudopeople_spark.linkage.clustering import LOCAL_FINISH_MAX_EDGES, cluster_records
 from pseudopeople_spark.linkage.metrics import pairwise_f1_on_candidates
 
 
 @dataclass
 class ResolveConfig:
+    """resolve()'s two settings: the weighted-score match threshold and
+    the durable stage-checkpoint directory (None: no checkpoints).
+
+    Everything else is fixed: all blocking passes (incl. the
+    sorted-neighborhood pass and the MinHash bands) always run; the
+    same-dataset-period veto always applies, because pseudopeople-style
+    extracts carry each entity at most ONCE per dataset-period (a pair
+    within one can only be a guardian-duplication twin); and clusters
+    that violate that invariant are always split (linkage.refine)."""
+
     threshold: float = 0.92
-    # pseudopeople-style extracts carry each entity at most ONCE per
-    # dataset-period (one census row per simulant per year), so a pair
-    # WITHIN one dataset can only be a guardian-duplication twin
-    # (record_id + "_dup") — every other same-dataset pair is a
-    # different entity by construction. Set False for dedup-style
-    # workloads where one source may repeat an entity.
-    unique_within_dataset: bool = True
-    max_block_size: int = 100
-    minhash_bands: int = 4
-    minhash_rows: int = 2
-    snb_window: int = 3
-    use_sorted_neighborhood: bool = True
-    use_minhash: bool = True
-    # split clusters whose transitive closure violates the
-    # dataset-period uniqueness invariant (linkage.refine): the FP mass
-    # at scale is same-household twins merged through a low-evidence
-    # bridge edge, and the violation is machine-detectable
-    refine_splits: bool = True
     checkpoint_dir: "str | None" = None
+    # blocks above this size are swept, not paired quadratically (a
+    # constant, readable here for callers that report on blocks)
+    max_block_size: ClassVar[int] = pairgen.MAX_BLOCK_SIZE
 
 
 CANONICAL_FIELDS = ["dataset", "period", "first_name", "middle", "last_name",
@@ -198,7 +199,7 @@ def _assign_int_ids(records: DataFrame, id_col: str = "record_id", max_tries: in
     pre-dedup rows at the 300k-simulant bench) and every pair row
     carries two ids through the dedup exchange and two scoring joins.
     With string ids the dedup alone costs 157s at 8 pinned cores; with
-    int64 ids, 64s (tools/ab_pair_dedup.py) — hashing, comparison and
+    int64 ids, 64s (A/B recorded in commit 2f55c86) — hashing, comparison and
     exchange bytes all shrink ~2.5x. At 10^12 records this is the
     difference between shuffling ~32TB and ~13TB per full-width pass.
 
@@ -253,16 +254,6 @@ def _assign_int_ids(records: DataFrame, id_col: str = "record_id", max_tries: in
     raise RuntimeError(f"no collision-free xxhash64 salt in {max_tries} tries for {id_col}")
 
 
-def candidate_blocks(records: DataFrame, cfg: ResolveConfig) -> DataFrame:
-    """All blocking passes as (block_key, record_id) — one scan, one
-    UDF evaluation, one stack (see blocking.all_block_keys)."""
-    return blocking.all_block_keys(
-        records,
-        minhash_bands=cfg.minhash_bands if cfg.use_minhash else 0,
-        minhash_rows=cfg.minhash_rows,
-    )
-
-
 def resolve(
     spark: SparkSession,
     records: DataFrame,
@@ -297,7 +288,7 @@ def resolve(
     t0 = _time.time()
     mapping, records, n_records = _assign_int_ids(records)
     stage_seconds["normalize"] = round(_time.time() - t0, 2)
-    blocks = _timed("blocking", lambda: candidate_blocks(records, cfg))
+    blocks = _timed("blocking", lambda: blocking.all_block_keys(records))
 
     def _pair_partitions() -> int:
         """Size the candidate-pair exchange from the DATA, not the
@@ -305,37 +296,29 @@ def resolve(
         one cheap aggregate over the (already materialized) block set —
         capped blocks contribute c(c-1)/2 pairs, oversized blocks a
         linear c·w sweep (pairs.pairs_from_blocks), sorted-neighborhood
-        ≤ n_records·window. Target ~250k pair rows (~4 MB of int64
+        ≤ n_records·SNB_WINDOW. Target ~250k pair rows (~4 MB of int64
         pairs) per partition; clamp to [defaultParallelism, shuffle
         width] so a small input still uses every core and a huge one
         never exceeds the operator-configured exchange width. A static
         conf value here is right at one scale only — wasteful at 20k
         rows, undersized at 10^12."""
-        w = 5  # pairs_from_blocks neighborhood_window default
-        cap = cfg.max_block_size
         per_block = F.when(
-            F.col("c") <= cap, F.col("c") * (F.col("c") - 1) / 2
-        ).otherwise(F.col("c") * w)
+            F.col("c") <= pairgen.MAX_BLOCK_SIZE, F.col("c") * (F.col("c") - 1) / 2
+        ).otherwise(F.col("c") * pairgen.SWEEP_WINDOW)
         _t0 = _time.time()
         ub_row = (
             blocks.groupBy("block_key").agg(F.count("*").alias("c"))
             .agg(F.sum(per_block).alias("ub")).first()
         )
         _PROF["pairs.ub_agg"] = round(_time.time() - _t0, 2)
-        ub = int(ub_row["ub"] or 0)
-        if cfg.use_sorted_neighborhood:
-            ub += n_records * cfg.snb_window
+        ub = int(ub_row["ub"] or 0) + n_records * blocking.SNB_WINDOW
         par = spark.sparkContext.defaultParallelism
         n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
         return max(par, min(-(-ub // 250_000), max(n_shuffle, par)))
 
     def _pairs() -> DataFrame:
-        p = pairgen.pairs_from_blocks(blocks, max_block_size=cfg.max_block_size, dedup=False)
-        if cfg.use_sorted_neighborhood:
-            snb = blocking.sorted_neighborhood_pairs(
-                records, ["last_name", "first_name", "dob"], window_size=cfg.snb_window
-            ).select("id_l", "id_r")
-            p = p.unionByName(snb)
+        snb = blocking.sorted_neighborhood_pairs(records, ["last_name", "first_name", "dob"])
+        p = pairgen.pairs_from_blocks(blocks).unionByName(snb.select("id_l", "id_r"))
         # ONE dedup shuffle for all pair sources, hash-partitioned on
         # id_l alone: HashPartitioning(id_l) satisfies the aggregate's
         # ClusteredDistribution([id_l, id_r]) (all copies of a pair share
@@ -365,38 +348,24 @@ def resolve(
         # simulants) bought nothing, and its GC pressure was measured to
         # DOUBLE the scoring stage's wall at local[8]. Matches ~ records,
         # not pairs: the only 100 TB-viable shape.
-        return scoring.match_pairs(
-            cand, records, n_records,
-            threshold=cfg.threshold,
-            same_dataset_distinct=cfg.unique_within_dataset,
-        )
+        return scoring.match_pairs(cand, records, n_records, threshold=cfg.threshold)
 
     scored = _timed("scoring", _scored)
     edges = scoring.match_edges(scored)
 
     def _assignments() -> DataFrame:
-        from pseudopeople_spark.linkage import clustering as _cl
-
-        if cfg.refine_splits and cfg.unique_within_dataset:
+        if edges.count() <= LOCAL_FINISH_MAX_EDGES:
             # Small-edge-set regime (same cap as the CC local finish):
             # ONE fused driver pass for CC + violation detection +
             # constrained rebuild — two Spark actions instead of ~8
             # fixed-latency jobs (refine.local_cluster_and_refine).
-            # Beyond the cap, or for string-id callers, the fully
-            # distributed shape below is the 10^12-record path.
-            if (
-                dict(edges.dtypes).get("id_l") == "bigint"
-                and edges.count() <= _cl.LOCAL_FINISH_MAX_EDGES
-            ):
-                asg = refine.local_cluster_and_refine(edges, records)
-            else:
-                asg = cluster_records(edges, records)
-                # detection = one aggregate over the records-sized
-                # assignment set; the rebuild touches only the (rare,
-                # entity-sized) violating clusters — see linkage.refine
-                asg = refine.split_violating_clusters(asg, edges, records)
+            asg = refine.local_cluster_and_refine(edges, records)
         else:
-            asg = cluster_records(edges, records)
+            # the fully distributed 10^12-record shape: detection = one
+            # aggregate over the records-sized assignment set; the
+            # rebuild touches only the (rare, entity-sized) violating
+            # clusters — see linkage.refine
+            asg = refine.split_violating_clusters(cluster_records(edges, records), edges, records)
         # translate back to the caller's string ids — one broadcast-size
         # join over the (small) assignment set, never over the pairs
         return (

@@ -6,7 +6,7 @@ simulant per year — reference ``interface.py`` generates one row per
 simulant per dataset pull; the guardian-duplication twin is the single
 exception and shares its original's ``base_rid``).  The match cascade
 (``scoring.cascade_match_mask``) already uses that invariant as a hard
-veto on DIRECT edges (``same_dataset_distinct``), but transitive
+veto on DIRECT edges (the same-dataset-period veto), but transitive
 closure can still merge two entities through a chain of cross-dataset
 edges: the measured FP mass at 300k simulants is dominated by
 same-household twins (same last name, same dob, similar first names —
@@ -26,11 +26,18 @@ convention the star-rounds and the local union-find converge to, so
 ids stay unique across the whole assignment set (min of disjoint rid
 sets, disjoint from untouched clusters).
 
-Scale shape: detection is ONE aggregate over the records-sized
-assignment set (slim 4-column frame).  Violating clusters are rare
-(~1e-4 of clusters at 300k) and small (entity-sized, not data-sized),
-so the rebuild is an ``applyInPandas`` cogroup over only those
-clusters' edges + members — no pair-scale shuffle anywhere.
+resolve() always refines, through one of two shapes picked by the
+match-edge count (pipeline, ``clustering.LOCAL_FINISH_MAX_EDGES``):
+
+* at most the cap: :func:`local_cluster_and_refine`, one driver pass
+  that fuses connected components, detection and rebuild;
+* above it: ``clustering.cluster_records`` then
+  :func:`split_violating_clusters`.  Detection there is ONE aggregate
+  over the records-sized assignment set
+  (:func:`find_violating_clusters`).  Violating clusters are rare
+  (~1e-4 of clusters at 300k) and small (entity-sized, not
+  data-sized), so the rebuild touches only those clusters' edges +
+  members — no pair-scale shuffle anywhere.
 """
 
 from __future__ import annotations
@@ -39,6 +46,8 @@ import time as _time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pseudopeople_spark.linkage.clustering import min_labels
 
 # driver-side sub-step walls, merged into resolve()'s stage_seconds
 # (same convention as scoring.PROF) so scaling evidence can attribute
@@ -114,11 +123,7 @@ def _rebuild(key, edge_pdf, node_pdf):
     )
 
 
-def local_cluster_and_refine(
-    edges: DataFrame,
-    records: DataFrame,
-    id_col: str = "record_id",
-) -> DataFrame:
+def local_cluster_and_refine(edges: DataFrame, records: DataFrame) -> DataFrame:
     """ONE driver pass fusing connected components + violation
     detection + constrained rebuild, for the small-edge-set regime.
 
@@ -131,46 +136,26 @@ def local_cluster_and_refine(
     finish — at 10^12 records it never does and the caller keeps the
     distributed path), TWO Spark actions suffice: collect the slim edge
     set and the slim (id, dataset, period, base_rid) meta projection;
-    everything else — vectorized min-label CC, slot-violation
-    detection, the greedy constrained rebuild (:func:`_rebuild`) — is
-    driver-local numpy/pandas.  Output (record_id, cluster_id) covers
-    ALL records (singletons keep their own id), identical by
-    construction to the distributed path (asserted in
-    tests/test_refine.py).
-
-    Requires int64 ids (the rid pipeline's verified-unique surrogates)."""
+    everything else — min-label CC (clustering.min_labels),
+    slot-violation detection, the greedy constrained rebuild
+    (:func:`_rebuild`) — is driver-local numpy/pandas.  Output
+    (record_id, cluster_id) covers ALL records (singletons keep their
+    own id), identical by construction to the distributed path
+    (asserted in tests/test_refine.py)."""
     import numpy as np
     import pandas as pd
 
     _t = _time.time()
     e_pdf = edges.select("id_l", "id_r", "score").toPandas()
-    meta_pdf = records.select(id_col, "dataset", "period", "base_rid").toPandas()
-    meta_pdf = meta_pdf.rename(columns={id_col: "record_id"})
+    meta_pdf = records.select("record_id", "dataset", "period", "base_rid").toPandas()
     PROF["refine.local_collect"] = round(_time.time() - _t, 2)
     _t = _time.time()
     spark = records.sparkSession
-    all_ids = records.select(F.col(id_col).alias("record_id"))
+    all_ids = records.select("record_id")
     if len(e_pdf) == 0:
         return all_ids.select("record_id", F.col("record_id").alias("cluster_id"))
     u = e_pdf["id_l"].to_numpy(dtype="int64")
-    v = e_pdf["id_r"].to_numpy(dtype="int64")
-    # vectorized min-label propagation with pointer jumping — the same
-    # kernel as clustering._local_union_find, converging to the
-    # component-min id label both the star-rounds and _rebuild use
-    ids = np.unique(np.concatenate([u, v]))
-    iu = np.searchsorted(ids, u)
-    iv = np.searchsorted(ids, v)
-    parent = np.arange(len(ids), dtype="int64")
-    while True:
-        m = np.minimum(parent[iu], parent[iv])
-        nxt = parent.copy()
-        np.minimum.at(nxt, iu, m)
-        np.minimum.at(nxt, iv, m)
-        nxt = nxt[nxt]
-        if np.array_equal(nxt, parent):
-            break
-        parent = nxt
-    labels = ids[parent]
+    ids, labels = min_labels(u, e_pdf["id_r"].to_numpy(dtype="int64"))
     PROF["refine.local_uf"] = round(_time.time() - _t, 2)
     _t = _time.time()
     # detection: every member of a multi-record cluster is edge-
@@ -190,7 +175,7 @@ def local_cluster_and_refine(
     else:
         _t = _time.time()
         bad_mask = node["cluster_id"].isin(bad).to_numpy()
-        e_bad = np.isin(labels[iu], list(bad))
+        e_bad = np.isin(labels[np.searchsorted(ids, u)], list(bad))
         fixed = _rebuild(None, e_pdf[e_bad], node[bad_mask])
         asg_pdf = pd.concat(
             [node.loc[~bad_mask, ["record_id", "cluster_id"]], fixed],
@@ -211,7 +196,6 @@ def split_violating_clusters(
     assignments: DataFrame,
     edges: DataFrame,
     records: DataFrame,
-    id_col: str = "record_id",
     local_limit: int = 2_000_000,
 ) -> DataFrame:
     """assignments (record_id, cluster_id) -> corrected assignments.
@@ -225,33 +209,22 @@ def split_violating_clusters(
     driver and rebuild in one vectorized pass, which costs two
     broadcast-semi SCANS and zero extra shuffles; above the gate, a
     cogroup ``applyInPandas`` keeps the rebuild distributed."""
-    meta = records.select(
-        F.col(id_col).alias("record_id"), "dataset", "period", "base_rid"
-    )
+    meta = records.select("record_id", "dataset", "period", "base_rid")
     # materialize the (slim, records-sized, 2-column) assignment set
-    # once: its consumers below (detection join, kept anti-join) would
-    # otherwise each replay the full connected-components lineage
-    # (measured: 96s -> ~15s clustering stage at 300k simulants)
+    # once: its consumers below (detection join, member and kept
+    # joins) would otherwise each replay the full connected-components
+    # lineage (measured: 96s -> ~15s clustering stage at 300k simulants)
     _t = _time.time()
     assignments = assignments.localCheckpoint()
     PROF["refine.asg_ckpt"] = round(_time.time() - _t, 2)
-    # ONE assignments><meta shuffle join feeds both the detection
-    # aggregate and the violating-node set (materialized: slim 5-column
-    # records-sized frame, two consumers)
-    _t = _time.time()
-    joined = assignments.join(meta, "record_id").localCheckpoint()
-    PROF["refine.joined_ckpt"] = round(_time.time() - _t, 2)
     # localCheckpoint: (a) materializes the tiny violating-id set once
     # for its consumers, (b) detaches lineage so the joins below aren't
     # flagged as an ambiguous self-join (bad descends from assignments);
     # rename the key so join conditions are unambiguous
     _t = _time.time()
     bad = (
-        joined.groupBy("cluster_id", "dataset", "period")
-        .agg(F.count_distinct("base_rid").alias("k"))
-        .where(F.col("k") >= 2)
+        find_violating_clusters(assignments, meta)
         .select(F.col("cluster_id").alias("bad_cid"))
-        .distinct()
         .localCheckpoint()
     )
     n_bad = bad.count()
@@ -259,18 +232,16 @@ def split_violating_clusters(
     if n_bad == 0:
         return assignments
     _t = _time.time()
+    in_bad = F.col("cluster_id") == F.col("bad_cid")
     bad_nodes = (
-        joined.join(
-            F.broadcast(bad), F.col("cluster_id") == F.col("bad_cid"), "left_semi"
-        )
+        assignments.join(F.broadcast(bad), in_bad, "left_semi")
+        .join(meta, "record_id")
         .select("cluster_id", "record_id", "dataset", "period", "base_rid")
         .localCheckpoint()
     )
     n_rows = bad_nodes.count()
     PROF["refine.nodes"] = round(_time.time() - _t, 2)
-    kept = assignments.join(
-        F.broadcast(bad), F.col("cluster_id") == F.col("bad_cid"), "left_anti"
-    )
+    kept = assignments.join(F.broadcast(bad), in_bad, "left_anti")
     spark = assignments.sparkSession
     if n_rows <= local_limit:
         # ---- driver-local path. The violating rid set is known, so
@@ -310,7 +281,7 @@ def split_violating_clusters(
     )
     bad_edges = (
         edges.join(asg_l, "id_l")
-        .join(F.broadcast(bad), F.col("cluster_id") == F.col("bad_cid"), "left_semi")
+        .join(F.broadcast(bad), in_bad, "left_semi")
         .select(F.col("cluster_id").alias("ecid"), "id_l", "id_r", "score")
     )
     fixed = bad_edges.groupBy("ecid").cogroup(

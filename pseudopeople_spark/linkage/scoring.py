@@ -349,7 +349,6 @@ def match_pairs(
     records: DataFrame,
     n_records: int,
     threshold: float = 0.92,
-    same_dataset_distinct: bool = False,
 ) -> DataFrame:
     """Score and decide every (id_l, id_r) pair; returns the matched
     rows only, as ``MATCH_COLUMNS``. ``records`` must carry
@@ -414,7 +413,7 @@ def match_pairs(
     families = _nickname_families()
 
     def _batches(batches):
-        return match_batches(batches, src, families, threshold, same_dataset_distinct)
+        return match_batches(batches, src, families, threshold)
 
     return cand.mapInArrow(_batches, schema)
 
@@ -458,7 +457,7 @@ def _lookup_table(src):
     return cache["index"], cache["cols"]
 
 
-def match_batches(batches, src, families, threshold=0.92, same_dataset_distinct=False):
+def match_batches(batches, src, families, threshold=0.92):
     """The worker-side batch function of every regime: Arrow batches of
     candidate pairs in, Arrow batches of matched ``MATCH_COLUMNS`` rows
     out. With a lookup ``src`` (see :func:`_lookup_table`) the input
@@ -496,7 +495,7 @@ def match_batches(batches, src, families, threshold=0.92, same_dataset_distinct=
             t2 = perf_counter()
         sims, score = compute(col, rb.num_rows)
         t3 = perf_counter()
-        mask = cascade_match_mask(sims, score, col, threshold, same_dataset_distinct)
+        mask = cascade_match_mask(sims, score, col, threshold)
         sel = pa.array(np.flatnonzero(mask))
         out = pa.RecordBatch.from_arrays(
             [
@@ -517,7 +516,7 @@ def match_batches(batches, src, families, threshold=0.92, same_dataset_distinct=
         yield out
 
 
-def cascade_match_mask(sim, score, aux, threshold=0.92, same_dataset_distinct=False):
+def cascade_match_mask(sim, score, aux, threshold=0.92):
     """The match decision over one batch's similarity vectors — a
     deterministic rule cascade, each tier motivated by one of the
     reference's noise channels, with the weighted score as the
@@ -548,8 +547,8 @@ def cascade_match_mask(sim, score, aux, threshold=0.92, same_dataset_distinct=Fa
               the only discriminating field. An SSN conflict (>4 edits)
               blocks tiers 2-6 too.
 
-    With ``same_dataset_distinct`` a pair within one dataset-period is
-    vetoed unless it is a guardian-duplication twin (same base_rid).
+    A pair within one dataset-period is vetoed unless it is a
+    guardian-duplication twin (same base_rid).
 
     Nulls follow SQL semantics: every NULL-producing comparison sits
     under an EVEN number of negations, so NaN comparisons yielding False
@@ -676,20 +675,18 @@ def cascade_match_mask(sim, score, aux, threshold=0.92, same_dataset_distinct=Fa
     tier6 = np.isnan(jl) & (jf >= 0.95) & (dob == 1.0) & mid_compat & sex_compat & ~ssn_conflict
 
     is_match = tier1 | tier1b | tier2 | tier3 | tier4 | tier5 | tier6
-    if same_dataset_distinct:
-        # one row per entity per dataset-PERIOD (reference interface.py),
-        # so a same-period pair is a different entity by construction —
-        # except a guardian-duplication twin, which shares its
-        # original's base_rid (verified 1:1 in pipeline._assign_int_ids).
-        # NULL periods compare equal: the conservative whole-dataset veto.
-        dup_twin = _np(pc.fill_null(pc.equal(aux["l_base_rid"], aux["r_base_rid"]), False))
-        same_ds = _np(pc.fill_null(pc.equal(aux["l_dataset"], aux["r_dataset"]), False))
-        lp, rp = aux["l_period"], aux["r_period"]
-        period_eq = _np(pc.fill_null(pc.equal(lp, rp), False)) | (
-            ~_np(lp.is_valid()) & ~_np(rp.is_valid())
-        )
-        is_match = is_match & (~(same_ds & period_eq) | dup_twin)
-    return is_match
+    # one row per entity per dataset-PERIOD (reference interface.py), so
+    # a same-period pair is a different entity by construction — except
+    # a guardian-duplication twin, which shares its original's base_rid
+    # (verified 1:1 in pipeline._assign_int_ids). NULL periods compare
+    # equal: the conservative whole-dataset veto.
+    dup_twin = _np(pc.fill_null(pc.equal(aux["l_base_rid"], aux["r_base_rid"]), False))
+    same_ds = _np(pc.fill_null(pc.equal(aux["l_dataset"], aux["r_dataset"]), False))
+    lp, rp = aux["l_period"], aux["r_period"]
+    period_eq = _np(pc.fill_null(pc.equal(lp, rp), False)) | (
+        ~_np(lp.is_valid()) & ~_np(rp.is_valid())
+    )
+    return is_match & (~(same_ds & period_eq) | dup_twin)
 
 
 def prune_edges_by_ssn_consensus(edges: DataFrame) -> DataFrame:

@@ -110,7 +110,7 @@ def duplicate_rows(
     duplicate_with_guardian's ``_dup``): emitting two rows under ONE
     record_id would silently break every downstream key consumer — CRN
     draws would noise the twins identically, key joins would fan out,
-    and cluster_records(ids_unique=True) assumes unique ids."""
+    and resolve()'s int64 surrogate ids require unique record ids."""
     base = df.withColumn(key_col, F.col(key_col).cast("string"))  # deterministic output type
     dupes = base.where(u01(F.col(key_col), seed, "duplicate_row") < p)
     dupes = dupes.withColumn(key_col, F.concat(F.col(key_col), F.lit("_dup2")))

@@ -46,13 +46,13 @@ def test_cc_large_random_union(spark):
 
 
 def test_cluster_records_covers_singletons(spark):
-    recs = spark.createDataFrame([("a",), ("b",), ("c",), ("d",)], ["record_id"])
-    edges = spark.createDataFrame([("a", "b")], ["id_l", "id_r"])
+    recs = spark.createDataFrame([(1,), (2,), (3,), (4,)], "record_id long")
+    edges = spark.createDataFrame([(1, 2)], "id_l long, id_r long")
     out = cluster_records(edges, recs)
     rows = {r["record_id"]: r["cluster_id"] for r in out.collect()}
     assert len(rows) == 4
-    assert rows["a"] == rows["b"]
-    assert len({rows["a"], rows["c"], rows["d"]}) == 3
+    assert rows[1] == rows[2]
+    assert len({rows[1], rows[3], rows[4]}) == 3
 
 
 def test_local_finish_matches_distributed(spark):

@@ -80,7 +80,7 @@ def test_pair_dedup_reuses_one_exchange(spark):
         (F.col("id") % 300).cast("string").alias("block_key"),
         F.concat(F.lit("r"), F.col("id")).alias("record_id"),
     )
-    p = pairgen.pairs_from_blocks(blocks, dedup=False)
+    p = pairgen.pairs_from_blocks(blocks)
     deduped = p.repartition("id_l").dropDuplicates(["id_l", "id_r"])
     recs = spark.range(5000).select(
         F.concat(F.lit("r"), F.col("id")).alias("id_l"), F.lit("x").alias("f")
@@ -126,9 +126,7 @@ def test_pairs_from_blocks_single_block_exchange_and_semantics(spark):
 
     got = {
         (r.id_l, r.id_r)
-        for r in pairgen.pairs_from_blocks(
-            blocks, max_block_size=100, neighborhood_window=5
-        ).collect()
+        for r in pairgen.pairs_from_blocks(blocks).collect()
     }
 
     expect = set()
@@ -137,15 +135,15 @@ def test_pairs_from_blocks_single_block_exchange_and_semantics(spark):
         by_key.setdefault(k, []).append(r)
     for k, ids in by_key.items():
         ids = sorted(ids)
-        if k == "BIG":
+        if len(ids) > pairgen.MAX_BLOCK_SIZE:
             for i, a in enumerate(ids):
-                for b2 in ids[i + 1 : i + 6]:
+                for b2 in ids[i + 1 : i + 1 + pairgen.SWEEP_WINDOW]:
                     expect.add((a, b2))
         else:
             expect.update(itertools.combinations(ids, 2))
     assert got == expect
 
-    plan = physical_plan(pairgen.pairs_from_blocks(blocks, dedup=False))
+    plan = physical_plan(pairgen.pairs_from_blocks(blocks))
     exchanges = [l for l in plan.splitlines() if "Exchange hashpartitioning" in l]
     block_key_exchanges = [l for l in exchanges if "block_key" in l]
     # one branch-shared exchange on block_key; union of the two filtered

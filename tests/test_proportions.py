@@ -22,12 +22,52 @@ def _require_samples():
         pytest.skip(f"reference sample datasets not found at {SAMPLES}")
 
 
-def test_defaults_do_not_warn():
-    cfg = get_config()
+# (column, noise_type, proportion) of a census RI/2020 slice in the
+# reference's metadata_proportions.csv layout: every column-noise type of
+# the default census config, plus the two guardian-duplication row-noise
+# groups (column empty). The use_nickname and guardian values are the
+# RI/2020 proportions quoted in test_excessive_levels_warn_per_slice;
+# the rest are illustrative eligibility shares.
+_PROPORTIONS = {"first_name": {"use_nickname": 0.602473}}
+_GUARDIAN_ROWS = {
+    "row_probability_in_households_under_18": 0.134586,
+    "row_probability_in_college_group_quarters_under_24": 0.786575,
+}
+
+
+def _write_metadata(root):
+    """A small metadata_proportions.csv under ``root`` covering the
+    default census noise types for RI/2020, with a decoy USA row that
+    would warn if the slice were ignored."""
+    import csv
+
+    rows = []
+    for col, types in get_config()["decennial_census"]["column_noise"].items():
+        for noise_type in types:
+            p = _PROPORTIONS.get(col, {}).get(noise_type, 0.5)
+            rows.append(("decennial_census", "RI", 2020, col, noise_type, p))
+    rows += [("decennial_census", "RI", 2020, "", t, p) for t, p in _GUARDIAN_ROWS.items()]
+    rows.append(("decennial_census", "USA", 2020, "first_name", "use_nickname", 0.001))
+    with open(root / "metadata_proportions.csv", "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(["dataset", "state", "year", "column", "noise_type", "proportion"])
+        w.writerows(rows)
+    return str(root)
+
+
+def test_defaults_do_not_warn(tmp_path):
+    source = _write_metadata(tmp_path)
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        msgs = validate_noise_level_proportions(SAMPLES, D.DECENNIAL_CENSUS, cfg, "RI", 2020)
+        msgs = validate_noise_level_proportions(source, D.DECENNIAL_CENSUS, get_config(), "RI", 2020)
     assert msgs == []
+    # the fixture is read: one level above its proportion warns
+    cfg = get_config({
+        "decennial_census": {"column_noise": {"first_name": {"use_nickname": {"cell_probability": 0.7}}}}
+    })
+    with pytest.warns(UserWarning, match="use_nickname"):
+        msgs = validate_noise_level_proportions(source, D.DECENNIAL_CENSUS, cfg, "RI", 2020)
+    assert len(msgs) == 1
 
 
 def test_excessive_levels_warn_per_slice():

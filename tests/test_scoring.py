@@ -217,16 +217,14 @@ def _tier_columns(threshold: float = 0.92) -> "dict[str, Column]":
     }
 
 
-def tiered_match(
-    scored: DataFrame, threshold: float = 0.92, same_dataset_distinct: bool = False
-) -> DataFrame:
+def tiered_match(scored: DataFrame, threshold: float = 0.92, same_ds: bool = False) -> DataFrame:
     """OR of the cascade tiers (see :func:`_tier_columns` for the rule
     rationale), plus the same-dataset-period hard constraint."""
     is_match = None
     for col in _tier_columns(threshold).values():
         c = F.coalesce(col, F.lit(False))
         is_match = c if is_match is None else (is_match | c)
-    if same_dataset_distinct and "l_dataset" in scored.columns:
+    if same_ds and "l_dataset" in scored.columns:
         # Within ONE extract period an entity appears at most once (one
         # census row per simulant per year, reference interface.py), so
         # a same-dataset pair is a different entity BY CONSTRUCTION —
@@ -291,10 +289,10 @@ def _match_set(df):
     }
 
 
-def _oracle_matches(spark, recs, pairs, same_ds, threshold=0.92):
-    """The oracle's matched rows for ``pairs``. Rows go in as Python
-    values with None for nulls — never NaN, which Spark orders above
-    every double."""
+def _oracle_matches(spark, recs, pairs, threshold=0.92):
+    """The oracle's matched rows for ``pairs``, with the same-dataset
+    veto on as in resolve(). Rows go in as Python values with None for
+    nulls — never NaN, which Spark orders above every double."""
     sims, score = _engine_sims(recs, pairs)
     rows = [
         (l, r, float(score[i]), *[_null(sims[f][i]) for f in SIMS],
@@ -306,16 +304,14 @@ def _oracle_matches(spark, recs, pairs, same_ds, threshold=0.92):
         + [f"sim_{f} double" for f in SIMS]
         + [f"{side}_{f} {FIELD_TYPES[f]}" for side in ("l", "r") for f in AUX]
     )
-    decided = tiered_match(spark.createDataFrame(rows, schema), threshold, same_ds)
+    decided = tiered_match(spark.createDataFrame(rows, schema), threshold, same_ds=True)
     return _match_set(decided.where(F.col("is_match")).select(*scoring.MATCH_COLUMNS))
 
 
-def _regime_matches(pairs, records, n_records, same_ds):
+def _regime_matches(pairs, records, n_records):
     """(regime taken, matched rows) for one match_pairs call."""
     scoring.PROF.clear()
-    got = _match_set(
-        scoring.match_pairs(pairs, records, n_records, same_dataset_distinct=same_ds)
-    )
+    got = _match_set(scoring.match_pairs(pairs, records, n_records))
     if "scoring.lookup_ipc" in scoring.PROF:
         return "ipc", got
     if "scoring.lookup_write" in scoring.PROF:
@@ -332,14 +328,14 @@ REGIMES = [
 ]
 
 
-def _check_regimes_against_oracle(spark, recs, pairs, same_ds):
+def _check_regimes_against_oracle(spark, recs, pairs):
     records = spark.createDataFrame(
         [(i, *[recs[i][f] for f in FIELD_TYPES]) for i in sorted(recs)], RECORD_SCHEMA
     ).localCheckpoint()
     pair_df = spark.createDataFrame(pairs, "id_l long, id_r long").localCheckpoint()
-    want = _oracle_matches(spark, recs, pairs, same_ds)
+    want = _oracle_matches(spark, recs, pairs)
     for regime, n_records in REGIMES:
-        took, got = _regime_matches(pair_df, records, n_records, same_ds)
+        took, got = _regime_matches(pair_df, records, n_records)
         assert took == regime, (n_records, took)
         assert got == want, (regime, n_records)
     return want
@@ -399,10 +395,54 @@ def _pool_pairs(n_records, k=6000, seed=11):
     return out
 
 
-@pytest.mark.parametrize("same_ds", [False, True])
-def test_regimes_match_oracle_on_adversarial_grid(spark, same_ds):
-    recs = _pool_records()
-    want = _check_regimes_against_oracle(spark, recs, _pool_pairs(len(recs)), same_ds)
+# --------------------------------------------------------------------------
+# boundary grid: values on both sides of the SSN near (<= 2 edits) and
+# conflict (> 4) thresholds, last name 0.85, birth year agree (<= 2) and
+# conflict (> 5), with many tier-4 (null dob) pairs — shifting any one of
+# those thresholds by one step changes decisions on it
+# --------------------------------------------------------------------------
+
+# SSNs 0/2/3/4/5 edits from the first, and one unrelated
+_BOUNDARY_SSNS = ["123456789", "123456700", "123456000", "123450000", "123400000", "987654321"]
+# last-name JW against SMITH: SMOOT 0.787 (< 0.80), SMIRK 0.813 (in
+# [0.80, 0.85)), SMYTHE 0.858, SMITHE 0.967 (>= 0.95)
+_BOUNDARY_POOLS = dict(
+    dataset=["census", "w2", "ssa"],
+    period=["2020", "2030", None],
+    first_name=[None, None, "WILLIAM", "WILLIAM", "WILLIAN", "MARY"],
+    middle=[None, "J", "K"],
+    last_name=[None, "SMITH", "SMITH", "SMITHE", "SMYTHE", "SMIRK", "SMOOT"],
+    # dob null on one side (tier 4) on ~60% of pairs; dob sims 1.0
+    # (equal or month/day swap), 0.875 and 0.75
+    dob=[None, None, None, "19800102", "19800102", "19800201", "19800103", "19800312"],
+    # birth years 1, 2, 3, 4, 5 and 6 apart
+    byear=["1980", "1982", "1983", "1985", "1986"],
+    ssn_digits=[None, None, *_BOUNDARY_SSNS],
+    zipcode=[None, "99501", "99502"],
+    city=[None, "ANCHORAGE"],
+    sex=[None, "M", "F"],
+)
+
+
+def _boundary_records(n=300, seed=8):
+    rng = random.Random(seed)
+    recs = {}
+    for i in range(n):
+        recs[i] = {f: rng.choice(pool) for f, pool in _BOUNDARY_POOLS.items()}
+        recs[i]["base_rid"] = i if rng.random() > 0.1 else max(0, i - 1)
+    return recs
+
+
+GRIDS = {
+    "adversarial": lambda: (_pool_records(), _pool_pairs(400)),
+    "boundary": lambda: (_boundary_records(), _pool_pairs(300, k=6000, seed=13)),
+}
+
+
+@pytest.mark.parametrize("grid", list(GRIDS))
+def test_regimes_match_oracle_on_grid(spark, grid):
+    recs, pairs = GRIDS[grid]()
+    want = _check_regimes_against_oracle(spark, recs, pairs)
     assert want, "the grid must produce matches"
 
 
@@ -443,7 +483,7 @@ def _edge_records():
 
 def test_regimes_match_oracle_on_edge_rows(spark):
     recs, pairs, _ = _edge_records()
-    _check_regimes_against_oracle(spark, recs, pairs, same_ds=True)
+    _check_regimes_against_oracle(spark, recs, pairs)
 
 
 def test_engine_known_values():
@@ -536,9 +576,7 @@ def test_resolve_scored_equals_oracle(spark):
     }
     pairs = [(r["id_l"], r["id_r"]) for r in out["pairs"].collect()]
     got = _match_set(out["scored"])
-    assert got and got == _oracle_matches(
-        spark, recs, pairs, rcfg.unique_within_dataset, rcfg.threshold
-    )
+    assert got and got == _oracle_matches(spark, recs, pairs, rcfg.threshold)
 
 
 def test_scratch_lookup_removed_on_every_branch(spark, tmp_path, monkeypatch):

@@ -158,7 +158,7 @@ def test_same_dataset_veto_scoped_to_period():
         "r_period": pa.array(["2030", "2020", None], pa.string()),
         "l_base_rid": pa.array([1, 3, 5]), "r_base_rid": pa.array([2, 4, 6]),
     }
-    got = cascade_match_mask(sims, np.ones(3), aux, same_dataset_distinct=True)
+    got = cascade_match_mask(sims, np.ones(3), aux)
     assert got[0], "cross-period same-dataset pair must not be hard-vetoed"
     assert not got[1], "same-period pair stays vetoed"
     assert not got[2], "null periods keep the whole-dataset veto"

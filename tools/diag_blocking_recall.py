@@ -20,7 +20,6 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from pseudopeople_spark.linkage import blocking  # noqa: E402
-from pseudopeople_spark.linkage.pipeline import ResolveConfig  # noqa: E402
 from pseudopeople_spark.session import get_spark  # noqa: E402
 
 
@@ -43,7 +42,6 @@ def main() -> None:
     total = true_pairs.count()
     print(f"true pairs: {total}")
 
-    cfg = ResolveConfig()
     blocks = blocking.all_block_keys(records).localCheckpoint()
     # tag each block key with its pass prefix
     pass_of = F.regexp_extract("block_key", r"^([a-z]+)", 1)
@@ -71,7 +69,7 @@ def main() -> None:
 
     # SNB pass (pair-generating, not key-based)
     snb = blocking.sorted_neighborhood_pairs(
-        records, ["last_name", "first_name", "dob"], window_size=cfg.snb_window
+        records, ["last_name", "first_name", "dob"]
     ).select("id_l", "id_r")
     snb_found = true_pairs.join(snb, ["id_l", "id_r"], "left_semi").count()
     per_pass["snb"] = round(snb_found / total, 5)
@@ -80,7 +78,7 @@ def main() -> None:
     # actual candidate set (with size caps) — the real blocking recall
     from pseudopeople_spark.linkage import pairs as pairgen
 
-    cand = pairgen.pairs_from_blocks(blocks, max_block_size=cfg.max_block_size, dedup=False)
+    cand = pairgen.pairs_from_blocks(blocks)
     cand = cand.unionByName(snb).dropDuplicates(["id_l", "id_r"]).localCheckpoint()
     found = true_pairs.join(cand, ["id_l", "id_r"], "left_semi").count()
     print(f"ACTUAL blocking recall (with caps): {round(found/total,5)} ({found}/{total})")

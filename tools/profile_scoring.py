@@ -49,9 +49,7 @@ def _pairs_path(n: int) -> str:
 
 def prepare(n: int) -> None:
     from pseudopeople_spark.linkage import blocking, pairs as pairgen
-    from pseudopeople_spark.linkage.pipeline import (
-        ResolveConfig, _assign_int_ids, candidate_blocks,
-    )
+    from pseudopeople_spark.linkage.pipeline import _assign_int_ids
     from pseudopeople_spark.session import get_spark
 
     raw = os.path.join(INPUT_DIR, f"records_{n}")
@@ -59,16 +57,14 @@ def prepare(n: int) -> None:
         from tools.bench_scaling import prepare as prep_raw
 
         prep_raw(n)
-    cfg = ResolveConfig()
     spark = get_spark("profile_prepare", master="local[16]", shuffle_partitions=64)
     records = spark.read.parquet(raw)
     _mapping, records, n_records = _assign_int_ids(records)
     records.write.mode("overwrite").parquet(_records_path(n))
     records = spark.read.parquet(_records_path(n))
-    blocks = candidate_blocks(records, cfg)
-    p = pairgen.pairs_from_blocks(blocks, max_block_size=cfg.max_block_size, dedup=False)
+    p = pairgen.pairs_from_blocks(blocking.all_block_keys(records))
     snb = blocking.sorted_neighborhood_pairs(
-        records, ["last_name", "first_name", "dob"], window_size=cfg.snb_window
+        records, ["last_name", "first_name", "dob"]
     ).select("id_l", "id_r")
     p = p.unionByName(snb).repartition(64, "id_l").dropDuplicates(["id_l", "id_r"])
     p.write.mode("overwrite").parquet(_pairs_path(n))
@@ -99,7 +95,7 @@ def inproc(n: int, max_batches: int, profile: bool) -> None:
     n_pairs = sum(b.num_rows for b in batches)
 
     def _run() -> None:
-        for _ in scoring.match_batches(iter(batches), lookup, families, 0.92, True):
+        for _ in scoring.match_batches(iter(batches), lookup, families, 0.92):
             pass
 
     if profile:
@@ -148,9 +144,7 @@ def leg(cores: int, n: int) -> None:
     pairs = pairs.repartition(n_parts, "id_l").localCheckpoint()
     n_records = records.count()
     t0 = time.time()
-    out = scoring.match_pairs(
-        pairs, records, n_records, threshold=cfg.threshold, same_dataset_distinct=True
-    )
+    out = scoring.match_pairs(pairs, records, n_records, threshold=cfg.threshold)
     t_setup = time.time() - t0  # lookup set-up (the eager part)
     out.write.mode("overwrite").format("noop").save()
     wall = round(time.time() - t0, 2)

@@ -30,7 +30,7 @@ def main() -> None:
     from pseudopeople_spark import config, datasets as D, noise, synth
     from pseudopeople_spark.checkpoint import _capped_local_checkpoint
     from pseudopeople_spark.linkage import blocking
-    from pseudopeople_spark.linkage.pipeline import ResolveConfig, candidate_blocks, normalize_records
+    from pseudopeople_spark.linkage.pipeline import ResolveConfig
     from pseudopeople_spark.session import get_spark
 
     spark = get_spark(f"profile_{cores}", master=f"local[{cores}]", shuffle_partitions=4 * cores)
@@ -54,17 +54,15 @@ def main() -> None:
     timed("py_worker_warmup", lambda: records.limit(1000).select(
         blocking.double_metaphone_udf(F.col("last_name"))).count())
 
-    # sub-part 1: the stack/phonetic passes only (metaphone UDF + soundex + ssn)
-    timed("blocking_stack_only", lambda: blocking.all_block_keys(records, minhash_bands=0).count())
-    # sub-part 2: minhash signature table only (explode + hash agg)
+    # sub-part 1: minhash signature table only (explode + hash agg)
+    name_text = F.concat_ws(
+        " ", F.coalesce(F.col("first_name"), F.lit("")), F.coalesce(F.col("last_name"), F.lit(""))
+    )
     timed("blocking_minhash_only", lambda: blocking._minhash_sig_table(
-        records.where(F.length(F.concat_ws(" ", F.coalesce(F.col("first_name"), F.lit("")),
-                                           F.coalesce(F.col("last_name"), F.lit("")))) > 1)
-        .select(F.col("record_id"), F.concat_ws(" ", F.coalesce(F.col("first_name"), F.lit("")),
-                                                F.coalesce(F.col("last_name"), F.lit(""))).alias("_nm")),
-        F.col("_nm"), "record_id", 8, 1337).count())
-    # sub-part 3: the full stage exactly as resolve() runs it (plan + checkpoint)
-    blocks = timed("blocking_full_ckpt", lambda: _capped_local_checkpoint(candidate_blocks(records, rcfg)))
+        records.where(F.length(name_text) > 1), name_text,
+        blocking.MINHASH_BANDS * blocking.MINHASH_ROWS, 1337).count())
+    # sub-part 2: the full stage exactly as resolve() runs it (plan + checkpoint)
+    blocks = timed("blocking_full_ckpt", lambda: _capped_local_checkpoint(blocking.all_block_keys(records)))
     n_blocks = blocks.count()
 
     # pairs-stage sub-parts (the scaling bench shows a large fixed
@@ -73,9 +71,9 @@ def main() -> None:
     from pseudopeople_spark.linkage import pairs as pairgen
     from pseudopeople_spark.linkage import scoring
 
-    raw_pairs = pairgen.pairs_from_blocks(blocks, max_block_size=rcfg.max_block_size, dedup=False)
+    raw_pairs = pairgen.pairs_from_blocks(blocks)
     snb = blocking.sorted_neighborhood_pairs(
-        records, ["last_name", "first_name", "dob"], window_size=rcfg.snb_window
+        records, ["last_name", "first_name", "dob"]
     ).select("id_l", "id_r")
     union_pairs = raw_pairs.unionByName(snb)
     timed("pairs_gen_nodedup_count", lambda: union_pairs.count())
@@ -90,9 +88,7 @@ def main() -> None:
     # large-input regime's extra cost), then the stage as resolve() runs it
     with_fields = scoring.attach_pair_fields(cand, records, list(scoring.LOOKUP_FIELDS))
     timed("scoring_attach_count", lambda: with_fields.count())
-    matched = scoring.match_pairs(
-        cand, records, n_records, threshold=rcfg.threshold, same_dataset_distinct=True
-    )
+    matched = scoring.match_pairs(cand, records, n_records, threshold=rcfg.threshold)
     timed("scoring_full_ckpt", lambda: _capped_local_checkpoint(matched).count())
 
     # clustering sub-parts on the real edge distribution: fabricate edges
