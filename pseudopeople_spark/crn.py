@@ -30,6 +30,8 @@ Three implementations, one contract:
 
 from __future__ import annotations
 
+import operator
+
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -43,21 +45,26 @@ _MINSTD_A = 48271
 _MINSTD_M = 2147483647  # 2**31 - 1
 
 
-def fold_salt64(seed: int | str, decision: str) -> int:
+def fold_salt64(seed: int, decision: str) -> int:
     """Fold (seed, decision) into ONE signed-int64 literal at plan-build
     time (FNV-1a). The previous draw shape hashed the two components as
     per-row STRING literals — xxhash64 walked ~30 literal bytes for
     every draw of every row; with ~60 draws/row in the census noise
     plan that was the single largest expression cost (measured 3.5x on
     a 40-draw microbench). Folding them driver-side leaves the per-row
-    work at one fixed-width hash."""
+    work at one fixed-width hash.
+
+    The folded text is ``"<seed>|<decision>"``. The seed must be an
+    integer (``operator.index``; a str raises TypeError): its decimal
+    form has no ``|``, so the first ``|`` is the boundary and no two
+    (seed, decision) inputs fold the same text."""
     acc = 0xCBF29CE484222325
-    for ch in f"{seed}|{decision}":
+    for ch in f"{operator.index(seed)}|{decision}":
         acc = ((acc ^ ord(ch)) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
     return acc - 2**64 if acc >= 2**63 else acc
 
 
-def hash_u01(key: Column | str, seed: int | str, decision: str) -> Column:
+def hash_u01(key: Column | str, seed: int, decision: str) -> Column:
     """Uniform [0,1) draw keyed by (seed, decision, record key).
 
     JVM-side: xxhash64 over (folded salt, key), low 40 bits → double.

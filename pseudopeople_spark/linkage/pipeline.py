@@ -10,8 +10,11 @@ measured size regime, switched by a named count: the scoring lookup by
 ``scoring.SMALL_LOOKUP_MAX_ROWS`` / ``LOOKUP_MAX_ROWS``, clustering by
 ``clustering.LOCAL_FINISH_MAX_EDGES``.
 
-Every stage boundary is an optional checkpoint (StageCheckpointer);
-resolve() returns each stage's wall clock in ``stage_seconds``.
+Every stage boundary is an optional checkpoint (StageCheckpointer).
+resolve() returns the five stage walls (normalize, blocking, pairs,
+scoring, clustering) in ``stage_seconds`` and times nothing finer; per
+stage jobs, tasks, shuffle, spill and worker CPU come from the
+benchmark's tracer (``perfbench/run.py --trace 1``).
 
 Stage shuffle budget (the thing that matters at 10^12 docs):
   1 shuffle for pair dedup (hash on id_l),
@@ -58,12 +61,6 @@ class ResolveConfig:
 
 CANONICAL_FIELDS = ["dataset", "period", "first_name", "middle", "last_name",
                     "dob", "byear", "ssn_digits", "zipcode", "city", "state", "sex"]
-
-# Fine-grained sub-stage wall clocks (dotted keys), merged into
-# resolve()'s stage_seconds: the N-vs-4N scaling work needs to know
-# WHICH sub-step inside a stage is the non-scaling (fixed) component,
-# not just the stage totals.
-_PROF: "dict[str, float]" = {}
 
 
 def _dob_digits(col: Column, fmt: str) -> Column:
@@ -225,27 +222,21 @@ def _assign_int_ids(records: DataFrame, id_col: str = "record_id", max_tries: in
     both cheap projections of ONE materialized frame; n_records, free
     from the verification pass, for data-driven partition sizing.
     """
-    import time as _time
-
     from pseudopeople_spark.checkpoint import _capped_local_checkpoint
 
     stripped = F.regexp_replace(F.col(id_col), r"_dup$", "")
     for salt in range(max_tries):
         rid = F.xxhash64(F.col(id_col), F.lit(salt))
         base = F.xxhash64(stripped, F.lit(salt))
-        _t0 = _time.time()
         with_rid = _capped_local_checkpoint(
             records.withColumn("__rid", rid).withColumn("base_rid", base)
         )
-        _PROF["normalize.ckpt"] = round(_time.time() - _t0, 2)
-        _t0 = _time.time()
         n, nd, nb, nbk = with_rid.agg(
             F.count("*"),
             F.count_distinct("__rid"),
             F.count_distinct("base_rid"),
             F.count_distinct(stripped),
         ).first()
-        _PROF["normalize.verify"] = round(_time.time() - _t0, 2)
         if n == nd and nb == nbk:
             mapping = with_rid.select(F.col("__rid").alias("rid"), F.col(id_col))
             recs = with_rid.drop(id_col).withColumnRenamed("__rid", id_col)
@@ -261,15 +252,14 @@ def resolve(
     truth: "DataFrame | None" = None,
 ) -> "dict":
     """Run the full pipeline on canonical records. Returns dict with
-    DataFrames (blocks, pairs, scored, edges, assignments) and, when
-    ``truth`` (record_id, simulant_id) is given, the pairwise-F1
-    metrics."""
+    DataFrames (blocks, pairs, scored, assignments), ``stage_seconds``
+    (the wall clock of each of the five stages) and, when ``truth``
+    (record_id, simulant_id) is given, the pairwise-F1 metrics."""
     import time as _time
 
     cfg = cfg or ResolveConfig()
     ckpt = StageCheckpointer(spark, cfg.checkpoint_dir or "", enabled=bool(cfg.checkpoint_dir))
     stage_seconds: "dict[str, float]" = {}
-    _PROF.clear()
 
     def _timed(name, fn):
         t0 = _time.time()
@@ -305,12 +295,10 @@ def resolve(
         per_block = F.when(
             F.col("c") <= pairgen.MAX_BLOCK_SIZE, F.col("c") * (F.col("c") - 1) / 2
         ).otherwise(F.col("c") * pairgen.SWEEP_WINDOW)
-        _t0 = _time.time()
         ub_row = (
             blocks.groupBy("block_key").agg(F.count("*").alias("c"))
             .agg(F.sum(per_block).alias("ub")).first()
         )
-        _PROF["pairs.ub_agg"] = round(_time.time() - _t0, 2)
         ub = int(ub_row["ub"] or 0) + n_records * blocking.SNB_WINDOW
         par = spark.sparkContext.defaultParallelism
         n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -351,9 +339,11 @@ def resolve(
         return scoring.match_pairs(cand, records, n_records, threshold=cfg.threshold)
 
     scored = _timed("scoring", _scored)
-    edges = scoring.match_edges(scored)
 
     def _assignments() -> DataFrame:
+        # consensus-pruned match edges: built here, inside the stage, so
+        # a resumed clustering checkpoint never recomputes them
+        edges = scoring.match_edges(scored)
         if edges.count() <= LOCAL_FINISH_MAX_EDGES:
             # Small-edge-set regime (same cap as the CC local finish):
             # ONE fused driver pass for CC + violation detection +
@@ -376,11 +366,6 @@ def resolve(
 
     assignments_full = _timed("clustering", _assignments)
     assignments = assignments_full.select("record_id", "cluster_id")
-    stage_seconds.update(_PROF)
-    stage_seconds.update(scoring.PROF)
-    scoring.PROF.clear()
-    stage_seconds.update(refine.PROF)
-    refine.PROF.clear()
 
     out = {
         "records": records,      # rid space (record_id is the int64 surrogate)
@@ -389,7 +374,6 @@ def resolve(
         "pairs": cand,           # rid space
         "scored": scored,        # rid space; MATCH rows only (the stage
                                  # checkpoints what downstream reads)
-        "edges": edges,          # rid space
         "assignments": assignments,  # original record_id space
         "stage_seconds": stage_seconds,
     }

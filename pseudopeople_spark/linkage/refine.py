@@ -42,17 +42,10 @@ match-edge count (pipeline, ``clustering.LOCAL_FINISH_MAX_EDGES``):
 
 from __future__ import annotations
 
-import time as _time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pseudopeople_spark.linkage.clustering import min_labels
-
-# driver-side sub-step walls, merged into resolve()'s stage_seconds
-# (same convention as scoring.PROF) so scaling evidence can attribute
-# the clustering stage's refine share
-PROF: "dict[str, float]" = {}
 
 
 def find_violating_clusters(assignments: DataFrame, meta: DataFrame) -> DataFrame:
@@ -145,19 +138,14 @@ def local_cluster_and_refine(edges: DataFrame, records: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    _t = _time.time()
     e_pdf = edges.select("id_l", "id_r", "score").toPandas()
     meta_pdf = records.select("record_id", "dataset", "period", "base_rid").toPandas()
-    PROF["refine.local_collect"] = round(_time.time() - _t, 2)
-    _t = _time.time()
     spark = records.sparkSession
     all_ids = records.select("record_id")
     if len(e_pdf) == 0:
         return all_ids.select("record_id", F.col("record_id").alias("cluster_id"))
     u = e_pdf["id_l"].to_numpy(dtype="int64")
     ids, labels = min_labels(u, e_pdf["id_r"].to_numpy(dtype="int64"))
-    PROF["refine.local_uf"] = round(_time.time() - _t, 2)
-    _t = _time.time()
     # detection: every member of a multi-record cluster is edge-
     # incident (singletons cannot violate), so meta restricted to the
     # endpoint set covers all candidates
@@ -169,11 +157,9 @@ def local_cluster_and_refine(edges: DataFrame, records: DataFrame) -> DataFrame:
         [node["cluster_id"], node["dataset"], per], sort=False, dropna=False
     )["base_rid"].nunique()
     bad = set(grp[grp >= 2].index.get_level_values(0))
-    PROF["refine.local_detect"] = round(_time.time() - _t, 2)
     if not bad:
         asg_pdf = node[["record_id", "cluster_id"]]
     else:
-        _t = _time.time()
         bad_mask = node["cluster_id"].isin(bad).to_numpy()
         e_bad = np.isin(labels[np.searchsorted(ids, u)], list(bad))
         fixed = _rebuild(None, e_pdf[e_bad], node[bad_mask])
@@ -181,15 +167,11 @@ def local_cluster_and_refine(edges: DataFrame, records: DataFrame) -> DataFrame:
             [node.loc[~bad_mask, ["record_id", "cluster_id"]], fixed],
             ignore_index=True,
         )
-        PROF["refine.local_rebuild"] = round(_time.time() - _t, 2)
-    _t = _time.time()
     asg = spark.createDataFrame(asg_pdf, schema="record_id long, cluster_id long")
-    out = all_ids.join(asg, "record_id", "left").select(
+    return all_ids.join(asg, "record_id", "left").select(
         "record_id",
         F.coalesce("cluster_id", F.col("record_id")).alias("cluster_id"),
     )
-    PROF["refine.local_emit"] = round(_time.time() - _t, 2)
-    return out
 
 
 def split_violating_clusters(
@@ -214,24 +196,19 @@ def split_violating_clusters(
     # once: its consumers below (detection join, member and kept
     # joins) would otherwise each replay the full connected-components
     # lineage (measured: 96s -> ~15s clustering stage at 300k simulants)
-    _t = _time.time()
     assignments = assignments.localCheckpoint()
-    PROF["refine.asg_ckpt"] = round(_time.time() - _t, 2)
     # localCheckpoint: (a) materializes the tiny violating-id set once
     # for its consumers, (b) detaches lineage so the joins below aren't
     # flagged as an ambiguous self-join (bad descends from assignments);
     # rename the key so join conditions are unambiguous
-    _t = _time.time()
     bad = (
         find_violating_clusters(assignments, meta)
         .select(F.col("cluster_id").alias("bad_cid"))
         .localCheckpoint()
     )
     n_bad = bad.count()
-    PROF["refine.detect"] = round(_time.time() - _t, 2)
     if n_bad == 0:
         return assignments
-    _t = _time.time()
     in_bad = F.col("cluster_id") == F.col("bad_cid")
     bad_nodes = (
         assignments.join(F.broadcast(bad), in_bad, "left_semi")
@@ -240,7 +217,6 @@ def split_violating_clusters(
         .localCheckpoint()
     )
     n_rows = bad_nodes.count()
-    PROF["refine.nodes"] = round(_time.time() - _t, 2)
     kept = assignments.join(F.broadcast(bad), in_bad, "left_anti")
     spark = assignments.sparkSession
     if n_rows <= local_limit:
@@ -248,7 +224,6 @@ def split_violating_clusters(
         # the edge restriction is a broadcast semi-join on id_l (both
         # endpoints share a cluster, so id_l membership suffices) — an
         # edge-set SCAN, no shuffle, no cogroup, no python workers.
-        _t = _time.time()
         node_pdf = bad_nodes.toPandas()
         rid_df = spark.createDataFrame(
             node_pdf[["record_id"]].rename(columns={"record_id": "id_l"})
@@ -258,8 +233,6 @@ def split_violating_clusters(
             .select("id_l", "id_r", "score")
             .toPandas()
         )
-        PROF["refine.collect"] = round(_time.time() - _t, 2)
-        _t = _time.time()
         # one GLOBAL greedy pass: violating clusters are disjoint node
         # sets and no match edge crosses clusters, so running the
         # constrained union-find over the whole collected set at once
@@ -270,7 +243,6 @@ def split_violating_clusters(
         fixed = spark.createDataFrame(
             fixed_pdf, schema="record_id long, cluster_id long"
         )
-        PROF["refine.rebuild"] = round(_time.time() - _t, 2)
         return kept.unionByName(fixed)
     # ---- distributed path (the 10^12-record regime). The edge side's
     # grouping key gets a fresh name (ecid): both cogroup sides would

@@ -300,12 +300,6 @@ def _make_sim_engine(families, specs):
 # next lookup, so a long-lived session holds at most one
 _LIVE_REC_DIR: "str | None" = None
 
-# driver-side sub-step wall clocks for the lookup set-up — merged into
-# resolve()'s stage_seconds so scaling benches can see which scoring
-# sub-step is fixed vs variable
-PROF: "dict[str, float]" = {}
-
-
 # Records tables at or under this row count ship to the workers as
 # Arrow IPC bytes INSIDE the task closure instead of a scratch-parquet
 # write + per-worker read: at bench scale (20k simulants = ~45k
@@ -377,7 +371,6 @@ def match_pairs(
     import os
     import shutil
     import tempfile
-    import time as _time
     import uuid
 
     from pyspark.sql import types as T
@@ -398,15 +391,12 @@ def match_pairs(
             T.StructField("r_ssn_digits", ssn_type),
         ]
     )
-    _t0 = _time.time()
     if n_records <= SMALL_LOOKUP_MAX_ROWS:
         src = ArrowIpcLookup(fields.toArrow())
-        PROF["scoring.lookup_ipc"] = round(_time.time() - _t0, 2)
     elif n_records <= LOOKUP_MAX_ROWS:
         base = os.environ.get("PP_FUSED_LOOKUP_DIR") or tempfile.gettempdir()
         src = _LIVE_REC_DIR = os.path.join(base, f"pp_fused_rec_{uuid.uuid4().hex}")
         fields.write.mode("overwrite").parquet(src)
-        PROF["scoring.lookup_write"] = round(_time.time() - _t0, 2)
     else:
         src = None
         cand = attach_pair_fields(cand, fields, list(LOOKUP_FIELDS))
@@ -417,13 +407,6 @@ def match_pairs(
 
     return cand.mapInArrow(_batches, schema)
 
-
-# Per-phase wall-clock accumulators for match_batches, updated by
-# every batch (two perf_counter calls per phase per 20k-row batch —
-# noise). Read by tools/profile_scoring.py --inproc, where the
-# generator runs driver-side; in real Spark runs each python worker
-# accumulates its own copy (not collected).
-PHASE_SECONDS: "dict[str, float]" = {"lookup": 0.0, "take": 0.0, "sims": 0.0, "emit": 0.0}
 
 # Single-slot per-worker cache of the records lookup table's decoded
 # structures (pd.Index over the id column + chunk-combined field
@@ -464,9 +447,9 @@ def match_batches(batches, src, families, threshold=0.92):
     batches carry only id_l/id_r and the fields are taken from the
     lookup; with ``src=None`` they already carry the l_*/r_* fields
     (the join regime). Module level so tools can drive it in-process
-    over pyarrow batches without a SparkSession."""
-    from time import perf_counter
-
+    over pyarrow batches without a SparkSession. It keeps no timers:
+    its cost is the scoring stage's python-worker CPU, which
+    ``perfbench/run.py --trace 1`` reads from outside."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -476,28 +459,23 @@ def match_batches(batches, src, families, threshold=0.92):
     if src is not None:
         index, rec_cols = _lookup_table(src)
     for rb in batches:
-        t0 = perf_counter()
         ids_l, ids_r = rb.column("id_l"), rb.column("id_r")
         if src is None:
             col = {name: rb.column(name) for name in rb.schema.names}
-            t1 = t2 = perf_counter()
         else:
             take_l = index.get_indexer(ids_l.to_numpy(zero_copy_only=False))
             take_r = index.get_indexer(ids_r.to_numpy(zero_copy_only=False))
             if (take_l < 0).any() or (take_r < 0).any():
                 raise ValueError("pair id not present in records lookup table")
-            t1 = perf_counter()
             col = {
                 f"{side}_{c}": pc.take(rec_cols[c], tk)
                 for side, tk in (("l", pa.array(take_l)), ("r", pa.array(take_r)))
                 for c in LOOKUP_FIELDS
             }
-            t2 = perf_counter()
         sims, score = compute(col, rb.num_rows)
-        t3 = perf_counter()
         mask = cascade_match_mask(sims, score, col, threshold)
         sel = pa.array(np.flatnonzero(mask))
-        out = pa.RecordBatch.from_arrays(
+        yield pa.RecordBatch.from_arrays(
             [
                 pc.take(ids_l, sel),
                 pc.take(ids_r, sel),
@@ -508,12 +486,6 @@ def match_batches(batches, src, families, threshold=0.92):
             ],
             names=list(MATCH_COLUMNS),
         )
-        t4 = perf_counter()
-        PHASE_SECONDS["lookup"] += t1 - t0
-        PHASE_SECONDS["take"] += t2 - t1
-        PHASE_SECONDS["sims"] += t3 - t2
-        PHASE_SECONDS["emit"] += t4 - t3
-        yield out
 
 
 def cascade_match_mask(sim, score, aux, threshold=0.92):

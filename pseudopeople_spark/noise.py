@@ -74,6 +74,10 @@ def noise_dataset(
     # Computed AFTER row noise so guardian-duplicated rows (new ids) get
     # their own base key. Draws stay keyed only by record identity:
     # partition/executor invariance is unchanged.
+    # The pre-hash is 64 bits, so distinct ids collide at the birthday
+    # rate: about n^2/2^65 row pairs at n rows (~3e-8 at 1M rows, ~0.03
+    # at 1e9, ~3e4 at 1e12). A colliding pair draws identical
+    # column-noise decisions; it never changes a row's identity.
     crn_key = "__crn64"
     df = df.withColumn(crn_key, F.xxhash64(F.col(key_col)))
 

@@ -31,7 +31,7 @@ and each Arrow batch stays columnar end-to-end.
 
 from __future__ import annotations
 
-from typing import Callable, Mapping, Sequence
+from typing import Mapping, Sequence
 
 import numpy as np
 import pandas as pd
@@ -212,88 +212,11 @@ def make_typos_udf(
     return typos
 
 
-def make_combined_token_noise_udf(specs: "list[tuple[str, Mapping, float, int]]"):
-    """ONE pandas UDF applying several token-noise kinds in sequence —
-    (kind, rules, token_probability, salt) per spec, each with its own
-    CRN mask column. Collapsing phonetic→OCR→typos into a single Arrow
-    crossing cuts the Python round-trips per noised column from 3 to 1
-    (the dominant fixed cost of the noising stage)."""
-    prepared = []
-    for kind, rules, tp, salt in specs:
-        if kind == "make_typos":
-            prepared.append(("typo", {k: str(v) for k, v in rules.items()}, tp, salt, 1, None))
-        else:
-            frozen = {k: tuple(v) for k, v in rules.items()}
-            fc = frozenset(k[0] for k in frozen if k)
-            prepared.append(("tok", frozen, tp, salt, max(len(k) for k in frozen), fc))
-
-    @F.pandas_udf(T.StringType())
-    def combined(key: pd.Series, *args: pd.Series) -> pd.Series:
-        masks = args[:-1]
-        val = args[-1]
-        out = val.copy()
-        keys = key.to_numpy(dtype=np.int64).astype(np.uint64)
-        vals = out.to_numpy(dtype=object)
-        notna = val.notna().to_numpy(dtype=bool)
-        for spec, mask in zip(prepared, masks):
-            kind, rules, tp, salt, mx, fc = spec
-            sel = mask.fillna(False).to_numpy(dtype=bool) & notna
-            idx = np.nonzero(sel)[0]
-            if len(idx) == 0:
-                continue
-            if kind == "typo":
-                for j in idx:
-                    vals[j] = _typo_one_impl(str(vals[j]), int(keys[j]), rules, tp, salt)
-            else:
-                for j in idx:
-                    vals[j] = _corrupt_tokens_one(
-                        str(vals[j]), int(keys[j]), salt, rules, mx, tp, first_chars=fc
-                    )
-        return pd.Series(vals, index=val.index, dtype=object)
-
-    return combined
-
-
-def apply_token_noise_plan(
-    df,
-    column: str,
-    key_col: str,
-    plan: "list[tuple[str, Mapping, float, float]]",
-    seed: int = 0,
-    u01: Callable = None,
-):
-    """Apply [(kind, rules, cell_probability, token_probability), ...]
-    to one column through a single combined UDF call. Masks and the
-    int64 row key are computed JVM-side (CRN)."""
-    from pseudopeople_spark.crn import hash_u01
-
-    u01 = u01 or hash_u01
-    specs = []
-    mask_cols = []
-    for kind, rules, cp, tp in plan:
-        decision = f"{kind}_{column}"
-        specs.append((kind, rules, tp, _salt(seed, decision)))
-        mask_cols.append(
-            F.col(column).isNotNull()
-            & (F.col(column).cast("string") != "")
-            & (u01(F.col(key_col), seed, decision) < cp)
-        )
-    udf = make_combined_token_noise_udf(specs)
-    # key_expr, not `key64`: that name is the imported crn numpy helper.
-    # (seed, tag) folded to one int64 at plan time; the key column is
-    # hashed in its native type (see crn.fold_salt64)
-    from pseudopeople_spark.crn import fold_salt64
-
-    key_expr = F.xxhash64(F.lit(fold_salt64(seed, f"tok_{column}")).cast("bigint"), F.col(key_col))
-    return df.withColumn(column, udf(key_expr, *mask_cols, F.col(column)))
-
-
 def apply_token_noise_all_columns(
     df,
     column_plans: "list[tuple[str, list[tuple[str, Mapping, float, float]]]]",
     key_col: str,
     seed: int = 0,
-    u01: Callable = None,  # kept for signature compat; masks are in-kernel CRN
 ):
     """Apply token noise to MANY columns through ONE pandas UDF call —
     a single Arrow crossing for the whole dataset instead of one per

@@ -69,6 +69,9 @@ def test_resolve_with_checkpoint_dir_resumes(spark, tmp_path):
     # all four stages snapshotted with manifests
     for stage in ("blocking", "pairs", "scoring", "clustering"):
         assert os.path.exists(os.path.join(root, stage, "_SUCCESS_STAGE")), stage
+    # one wall clock per stage and nothing finer
+    assert set(r1["stage_seconds"]) == {"normalize", "blocking", "pairs", "scoring", "clustering"}
+    assert "edges" not in r1
 
     # resume: identical assignments, stages loaded not recomputed
     r2 = resolve(spark, records, ResolveConfig(checkpoint_dir=root))

@@ -4,9 +4,12 @@ the portable LCG evaluates identically in DuckDB."""
 
 import duckdb
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
-from pseudopeople_spark.crn import hash_u01, portable_u01, portable_u01_sql, splitmix64_u01
+from pseudopeople_spark.crn import (
+    fold_salt64, hash_u01, portable_u01, portable_u01_sql, splitmix64_u01,
+)
 
 
 def test_hash_u01_range_and_determinism(spark):
@@ -27,6 +30,16 @@ def test_different_seeds_and_decisions_differ(spark):
     u3 = base.select(hash_u01(F.col("id"), 1, "e").alias("u")).collect()
     assert [r["u"] for r in u1] != [r["u"] for r in u2]
     assert [r["u"] for r in u1] != [r["u"] for r in u3]
+
+
+def test_fold_salt64_pinned_and_int_seeds_only():
+    # pinned: a change here moves every hash_u01 draw
+    assert fold_salt64(42, "t") == 3634673010641215355
+    assert fold_salt64(1, "omit_row") == 2484120193484982234
+    assert fold_salt64(np.int64(42), "t") == fold_salt64(42, "t")
+    # a str seed could carry the "|" separator ("1|a", "b" vs "1", "a|b")
+    with pytest.raises(TypeError):
+        fold_salt64("1|a", "b")
 
 
 def test_portable_u01_matches_duckdb(spark):

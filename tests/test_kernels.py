@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from pseudopeople_spark.operators.kernels import (
     _corrupt_tokens_one,
-    apply_token_noise_plan,
+    apply_token_noise_all_columns,
     make_corrupt_tokens_udf,
     make_typos_udf,
 )
@@ -73,8 +73,8 @@ def test_apply_token_noise_plan_determinism_across_partitions(spark):
         F.lit("Johnson").alias("name"),
     )
     plan = [("make_typos", {"o": "ip", "n": "mh"}, 0.5, 0.5)]
-    a = apply_token_noise_plan(base.repartition(3), "name", "record_id", plan, seed=5)
-    b = apply_token_noise_plan(base.repartition(19), "name", "record_id", plan, seed=5)
+    a = apply_token_noise_all_columns(base.repartition(3), [("name", plan)], "record_id", seed=5)
+    b = apply_token_noise_all_columns(base.repartition(19), [("name", plan)], "record_id", seed=5)
     da = {r["record_id"]: r["name"] for r in a.collect()}
     db = {r["record_id"]: r["name"] for r in b.collect()}
     assert da == db

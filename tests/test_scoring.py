@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import math
 import random
+from unittest import mock
 
 import pyarrow as pa
 import pytest
@@ -309,14 +310,14 @@ def _oracle_matches(spark, recs, pairs, threshold=0.92):
 
 
 def _regime_matches(pairs, records, n_records):
-    """(regime taken, matched rows) for one match_pairs call."""
-    scoring.PROF.clear()
-    got = _match_set(scoring.match_pairs(pairs, records, n_records))
-    if "scoring.lookup_ipc" in scoring.PROF:
-        return "ipc", got
-    if "scoring.lookup_write" in scoring.PROF:
-        return "parquet", got
-    return "join", got
+    """(regime taken, matched rows) for one match_pairs call. Spies on
+    the IPC lookup and the attach join, module globals that match_pairs
+    looks up at call time; a call reaching neither took the parquet
+    lookup."""
+    with mock.patch.object(scoring, "ArrowIpcLookup", wraps=scoring.ArrowIpcLookup) as ipc, \
+            mock.patch.object(scoring, "attach_pair_fields", wraps=scoring.attach_pair_fields) as join:
+        got = _match_set(scoring.match_pairs(pairs, records, n_records))
+    return ("ipc" if ipc.called else "join" if join.called else "parquet"), got
 
 
 # each regime from both sides of its thresholds

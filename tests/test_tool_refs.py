@@ -8,6 +8,9 @@ but no test runs them. Statically check every reference they make:
   * each keyword of a ``ResolveConfig(...)`` call must be an init field,
     and each attribute read on a name bound to a ``ResolveConfig(...)``
     call anywhere in the file must exist on the class.
+
+The shell launchers (``tools/*.sh``) run those scripts by path; every
+``*.py`` path they name must exist relative to the repo root.
 """
 
 from __future__ import annotations
@@ -15,6 +18,7 @@ from __future__ import annotations
 import ast
 import dataclasses
 import importlib
+import re
 from pathlib import Path
 
 import pytest
@@ -28,6 +32,7 @@ SCRIPTS = sorted(
         *REPO.glob("*.py"),
     ]
 )
+LAUNCHERS = sorted(REPO.glob("tools/*.sh"))
 CONFIG_FIELDS = {f.name for f in dataclasses.fields(ResolveConfig) if f.init}
 
 
@@ -103,4 +108,12 @@ def test_script_references_exist(path):
         modules = [_module(m) for m in bindings.get(owner, {owner})]
         if not any(m is not None and hasattr(m, attr) for m in modules):
             missing.append(f"{path.name}:{line} {owner}.{attr}")
+    assert not missing, missing
+
+
+@pytest.mark.parametrize("path", LAUNCHERS, ids=lambda p: str(p.relative_to(REPO)))
+def test_launcher_script_paths_exist(path):
+    scripts = re.findall(r"[\w./-]+\.py\b", path.read_text())
+    assert scripts, f"{path.name} runs no python script"
+    missing = sorted({s for s in scripts if not (REPO / s).is_file()})
     assert not missing, missing

@@ -1,7 +1,7 @@
 """Scoring-stage profiler — isolates the ER pipeline's dominant stage
 (the fused mapInArrow scorer) so its parallel efficiency can be
-measured and its per-phase costs attributed WITHOUT re-running the
-whole resolve() per iteration.
+measured and its hot spots profiled WITHOUT re-running the whole
+resolve() per iteration.
 
 Three modes:
 
@@ -9,9 +9,9 @@ Three modes:
                       int-id records + deduped candidate pairs parquet
                       (same plans resolve() runs, at local[16])
   --inproc <n>        run the scoring batch function driver-side over
-                      pyarrow batches (no Spark) with per-phase timers
-                      and an optional cProfile dump — hypothesis testing
-                      in seconds instead of Spark legs in minutes
+                      pyarrow batches (no Spark), with an optional
+                      cProfile dump — hypothesis testing in seconds
+                      instead of Spark legs in minutes
   --leg <cores> <n>   one pinned Spark leg timing ONLY the scoring
                       stage (scoring.match_pairs, as resolve() runs
                       it), noop sink
@@ -115,7 +115,6 @@ def inproc(n: int, max_batches: int, profile: bool) -> None:
     print(json.dumps({
         "n": n, "pairs": n_pairs, "wall_sec": round(wall, 2),
         "pairs_per_sec": round(n_pairs / wall, 1),
-        "phase_sec": {k: round(v, 2) for k, v in scoring.PHASE_SECONDS.items()},
     }))
 
 
